@@ -1,16 +1,33 @@
-"""Python worker daemon with heavy imports preloaded (guide §4.5,
-applied to interpreter state): the pyspark daemon forks one worker per
-concurrent task, and each fork re-imports pandas/pyarrow/numpy on its
-first Arrow batch (~1 s of pure import per worker, paid by the first
-mapInPandas/pandas-UDF stage of a session — 32 workers on a 32-core
-local box). Importing them ONCE in the daemon parent lets every fork
-inherit the loaded modules copy-on-write instead.
+"""Python worker daemon that pays per-worker and per-task set-up once.
+
+The pyspark daemon forks one worker per concurrent task. Two set-up
+costs are moved out of the forked workers:
+
+1. **Heavy imports.** pandas/pyarrow/numpy and the engine's own kernels
+   are imported once in the daemon parent, so every fork inherits the
+   loaded modules copy-on-write instead of importing them on its first
+   Arrow batch.
+2. **Zip-directory re-reads.** Before every task, ``pyspark.worker``
+   calls ``importlib.invalidate_caches()`` (``worker_util.
+   setup_spark_files``). Before Python 3.12 that makes each
+   ``zipimporter`` re-parse its archive's whole central directory in
+   pure Python, right away. The workers hold 14 importers into
+   ``pyspark.zip`` (1,328 entries): 0.12 s of CPU per python task,
+   measured on Python 3.11, and a flagship iteration over 2,000 pages
+   runs 16 python tasks. ``guard_zip_directories`` makes the re-read
+   happen only when the archive's ``(st_mtime_ns, st_size)`` changed.
+   Python 3.12 made the re-read lazy (CPython gh-103200), so there the
+   guard does nothing.
 
 Opt in with ``spark.python.daemon.module =
-pdf_metadata_extraction_spark.daemon_preload`` (set by
-``session.get_spark``; env-overridable). The module must be
-importable on every worker host — true for local mode and for any
+pdf_metadata_extraction_spark.daemon_preload`` (``session.get_spark``
+sets it for ``local`` masters; env-overridable). The module must be
+importable on every worker host: true for local mode and for any
 cluster that ships the package."""
+
+import os
+import sys
+import zipimport
 
 # EVERY preload import is individually guarded: a missing/broken
 # library must degrade to the stock lazy-import behavior, never take
@@ -30,5 +47,41 @@ for _mod in (
 
 from pyspark.daemon import manager
 
+
+def _stat_key(archive: str) -> tuple[int, int] | None:
+    try:
+        st = os.stat(archive)
+    except OSError:
+        return None
+    return (st.st_mtime_ns, st.st_size)
+
+
+def guard_zip_directories() -> None:
+    """Re-read a zip archive's directory on ``invalidate_caches()`` only
+    when the archive changed, and stamp every importer that exists now
+    with its archive's current stat key (no re-read: the directory was
+    read when the importer was made). An importer without a stamp reads
+    on its first call, as before, and is stamped then. Idempotent; a
+    no-op from Python 3.12 on."""
+    if sys.version_info >= (3, 12):
+        return
+    cls = zipimport.zipimporter
+    if not getattr(cls.invalidate_caches, "reads_only_on_change", False):
+        stock = cls.invalidate_caches
+
+        def invalidate_caches(self):
+            key = _stat_key(self.archive)
+            if key is None or key != getattr(self, "_dir_stat_key", None):
+                stock(self)
+                self._dir_stat_key = key
+
+        invalidate_caches.reads_only_on_change = True
+        cls.invalidate_caches = invalidate_caches
+    for finder in list(sys.path_importer_cache.values()):
+        if isinstance(finder, cls):
+            finder._dir_stat_key = _stat_key(finder.archive)
+
+
 if __name__ == "__main__":
+    guard_zip_directories()
     manager()

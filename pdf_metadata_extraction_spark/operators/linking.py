@@ -13,8 +13,10 @@ Reference semantics (pinned by /root/reference/src/tests/test_end_to_end.py):
 Spark shape: ``segments ⋈ broadcast(options)`` — the dictionary is always
 the small side (10²-10⁵ labels), so this is a **broadcast join**; the
 match predicate itself runs as a vectorized batch matcher inside a
-pandas UDF (precompiled alternation regex per extraction_name — no
-per-row Python interpretation of the dictionary).
+mapInArrow stage (precompiled alternation regex per extraction_name — no
+per-row Python interpretation of the dictionary). Only the text and
+extraction_name columns leave Arrow; every other column passes through
+as the Arrow arrays it came in.
 
 At 100 TB the broadcast is built once per extraction; matching stays in
 the Arrow stage with the segment scan's partitioning (no shuffle).
@@ -28,9 +30,10 @@ from collections.abc import Iterator
 
 _lru_cache_small = functools.lru_cache(maxsize=256)
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from pdf_metadata_extraction_spark.schemas import arrow_schema
 
 MATCH_OPEN = '<span class="ix_match">'
 MATCH_CLOSE = "</span>"
@@ -48,11 +51,6 @@ def highlight(text: str, start: int, end: int) -> str:
         f"{PARA_MATCH_OPEN}{text[:start]}{MATCH_OPEN}{text[start:end]}"
         f"{MATCH_CLOSE}{text[end:]}{PARA_CLOSE}"
     )
-
-
-def _word_pattern(label: str) -> re.Pattern:
-    # whole-word, case-sensitive first; the boundary is "not aliphanumeric"
-    return re.compile(rf"(?<!\w){re.escape(label)}(?!\w)")
 
 
 @_lru_cache_small
@@ -274,7 +272,6 @@ def link_options(
 
     from pyspark.sql import types as T
 
-    cols = [f.name for f in segments.schema.fields]
     out_schema = T.StructType(
         list(segments.schema.fields)
         + [
@@ -292,14 +289,15 @@ def link_options(
             )
         ]
     )
+    values_field = arrow_schema(spark, out_schema).field("values")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         d = bc.value
-        for pdf in batches:
-            pdf = pdf.reset_index(drop=True)
-            n = len(pdf)
+        for batch in batches:
+            n = batch.num_rows
             vals: list[list] = [[] for _ in range(n)]
-            texts = pdf[text_col].fillna("").astype(str)
+            texts = batch.column(text_col).to_pandas().fillna("").astype(str)
+            names = batch.column("extraction_name").to_pandas()
             # vectorized tier gate (round-2 verdict #6): ONE C-speed
             # Series.str pass per dictionary decides which rows can match
             # at all (exact alternation on the raw text, fuzzy
@@ -307,9 +305,7 @@ def link_options(
             # inputs match_options scans), so the per-row Python spec
             # only runs on rows with a hit. Web corpora are sparse in
             # dictionary hits, so this removes the per-row hot path.
-            for name, idx in pdf.groupby(
-                "extraction_name", sort=False
-            ).indices.items():
+            for name, idx in names.groupby(names, sort=False).indices.items():
                 mv, opts = d.get(name, (True, []))
                 labels = _unique_labels(tuple(opts))
                 if not labels:
@@ -337,8 +333,10 @@ def link_options(
                         vals[i] = match_options(
                             texts.iloc[i], opts, mv, fuzzy=fuzzy
                         )
-            pdf = pdf[cols].copy()
-            pdf["values"] = vals
-            yield pdf
+            # input columns pass through as the Arrow arrays they came in
+            yield pa.RecordBatch.from_arrays(
+                batch.columns + [pa.array(vals, type=values_field.type)],
+                schema=batch.schema.append(values_field),
+            )
 
-    return segments.mapInPandas(run, schema=out_schema)
+    return segments.mapInArrow(run, schema=out_schema)

@@ -16,7 +16,7 @@ Four extractor kinds, mirroring the reference registry
 - ``text_to_multi_option`` (source_text, closed vocabulary)
 
 Scale notes:
-- pages→segments is **fused** into a single mapInPandas (tokenize +
+- pages→segments is **fused** into a single mapInArrow (tokenize +
   segment per document in one Arrow batch) — no shuffle; boxes ride in
   as columns via a url join that is broadcast (requests/labels are small
   per extraction) or co-partitioned at the Iceberg bucket(url) layout.
@@ -29,7 +29,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 from dataclasses import dataclass, field
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -48,7 +48,7 @@ from pdf_metadata_extraction_spark.operators.selector import (
     train_selector,
 )
 from pdf_metadata_extraction_spark.operators.triples import finalize_triples
-from pdf_metadata_extraction_spark.schemas import SEGMENTS
+from pdf_metadata_extraction_spark.schemas import SEGMENTS, arrow_schema
 
 
 @dataclass
@@ -91,39 +91,34 @@ def segments_from_pages(
     if has_label:
         cols.append("label_segments_boxes")
     df = pages_with_boxes.select(*cols)
+    out_schema = arrow_schema(df.sparkSession, SEGMENTS)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls = pdf["url"].values
-            htmls = pdf["html"].values
-            sbs = pdf["xml_segments_boxes"].values if has_seg else None
-            lbs = pdf["label_segments_boxes"].values if has_label else None
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            urls = batch.column("url").to_pylist()
+            htmls = batch.column("html").to_pylist()
+            none = [None] * batch.num_rows
+            sbs = batch.column("xml_segments_boxes").to_pylist() if has_seg else none
+            lbs = batch.column("label_segments_boxes").to_pylist() if has_label else none
             rows = []
-            for i in range(len(pdf)):
-                data = htmls[i]
-                toks = tokenize_bytes(bytes(data) if data is not None else None)
+            for url, data, sb, lb in zip(urls, htmls, sbs, lbs):
+                toks = tokenize_bytes(data)
                 if page_range is not None:
                     toks = [
                         t for t in toks
                         if page_range[0] <= t["page"] <= page_range[1]
                     ]
-                raw_sb = sbs[i] if sbs is not None else None
-                raw_lb = lbs[i] if lbs is not None else None
-                sb = [dict(b) for b in raw_sb] if raw_sb is not None else []
-                lb = [dict(b) for b in raw_lb] if raw_lb is not None else []
+                sb = sb or []
+                lb = lb or []
                 dims = (0.0, 0.0)
                 if sb and sb[0].get("page_width"):
                     dims = (sb[0]["page_width"], sb[0]["page_height"])
                 for s in segment_doc(toks, sb, lb, dims):
-                    s["url"] = urls[i]
+                    s["url"] = url
                     rows.append(s)
-            yield pd.DataFrame(
-                rows,
-                columns=["url", "segment_id", "page", "text", "segment_type",
-                         "boxes", "is_label", "font_size", "bold_ratio"],
-            )
+            yield pa.RecordBatch.from_pylist(rows, schema=out_schema)
 
-    return df.mapInPandas(run, schema=SEGMENTS)
+    return df.mapInArrow(run, schema=SEGMENTS)
 
 
 def _ingest_labels(labels: DataFrame) -> DataFrame:

@@ -222,3 +222,13 @@ PARAGRAPHS = T.StructType(
         T.StructField("needs_user_review", T.BooleanType(), True),
     ]
 )
+
+
+def arrow_schema(spark, schema: T.StructType):
+    """The ``pyarrow.Schema`` a ``mapInArrow`` stage of ``spark`` must
+    emit for ``schema`` (large string/binary types when the session
+    sets ``spark.sql.execution.arrow.useLargeVarTypes``)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    large = spark.conf.get("spark.sql.execution.arrow.useLargeVarTypes") == "true"
+    return to_arrow_schema(schema, prefers_large_types=large)

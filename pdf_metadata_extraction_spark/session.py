@@ -5,8 +5,8 @@ Design notes (100 TB target):
   (mega-domain skew is expected in Common-Crawl-style inputs; the
   reference has no analogue — SURVEY.md §4).
 - Arrow on, bounded batch size: every Python kernel in this engine is a
-  vectorized pandas UDF / mapInPandas / applyInPandas stage; per-row
-  Python UDFs are banned (BASELINE.json input_hint).
+  vectorized mapInArrow / pandas UDF / mapInPandas / applyInPandas
+  stage; per-row Python UDFs are banned (BASELINE.json input_hint).
 - shuffle partitions default to cores locally; on a real cluster set
   ``spark.sql.shuffle.partitions`` ~ 2-3x total cores and rely on AQE
   coalescing.
@@ -14,12 +14,26 @@ Design notes (100 TB target):
 
 from __future__ import annotations
 
+import logging
 import os
 import tempfile
 
 from pyspark.sql import SparkSession
 
 ARROW_BATCH = 10_000
+
+
+def python_daemon_module(master: str) -> str | None:
+    """The python worker daemon to run under ``master``, or None for
+    pyspark's own. daemon_preload forks workers that already hold
+    pandas/pyarrow/numpy and skip the per-task zip-directory re-reads.
+    It is the default only on a local master, where the workers share
+    this process's PYTHONPATH; a cluster that ships the package opts in
+    through SPARK_GRAFT_PY_DAEMON (empty = pyspark's own daemon)."""
+    daemon = os.environ.get("SPARK_GRAFT_PY_DAEMON")
+    if daemon is None and master.startswith("local"):
+        daemon = "pdf_metadata_extraction_spark.daemon_preload"
+    return daemon or None
 
 
 def get_spark(
@@ -68,17 +82,6 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
-        # round 7 (guide §4.5): fork python workers from a daemon that
-        # has pandas/pyarrow/numpy ALREADY imported — each worker
-        # otherwise re-imports them on its first Arrow batch (paid once
-        # per worker per session, at every core in parallel)
-        .config(
-            "spark.python.daemon.module",
-            os.environ.get(
-                "SPARK_GRAFT_PY_DAEMON",
-                "pdf_metadata_extraction_spark.daemon_preload",
-            ),
-        )
         .config("spark.sql.session.timeZone", "UTC")
         # round 7 (guide §2.1/§7.4 and the box's measured failure mode):
         # shuffle blocks live under spark.local.dir; this sandbox's /tmp
@@ -110,6 +113,9 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
         )
     )
+    daemon = python_daemon_module(master)
+    if daemon:
+        b = b.config("spark.python.daemon.module", daemon)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
@@ -122,11 +128,17 @@ def get_spark(
     # for sessions that never run a python stage is not achievable, so
     # it is switchable off via env for such callers.
     if os.environ.get("SPARK_GRAFT_WARM_PYTHON_POOL", "1") == "1":
-        try:
-            n = spark.sparkContext.defaultParallelism
-            spark.range(n).repartition(n).mapInPandas(
-                lambda it: it, "id long"
-            ).count()
-        except Exception:  # pragma: no cover - warmup must never fail a session
-            pass
+        warm_python_pool(spark)
     return spark
+
+
+def warm_python_pool(spark: SparkSession) -> None:
+    """Run one identity python batch per core; a failure is logged as a
+    warning and never fails the session."""
+    try:
+        n = spark.sparkContext.defaultParallelism
+        spark.range(n).repartition(n).mapInPandas(lambda it: it, "id long").count()
+    except Exception:
+        logging.getLogger(__name__).warning(
+            "python worker pool warm-up failed", exc_info=True
+        )

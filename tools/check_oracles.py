@@ -44,7 +44,9 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from pdf_metadata_extraction_spark.session import get_spark
 
-    spark = get_spark(app_name="oracle-check", master="local[8]", shuffle_partitions=8)
+    # local[$SPARK_GRAFT_CPUS] with as many shuffle partitions, as in
+    # get_spark(); set SPARK_GRAFT_CPUS=$(nproc) to use every core
+    spark = get_spark(app_name="oracle-check")
     db = duckdb.connect()
     for t in TABLES:
         db.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
