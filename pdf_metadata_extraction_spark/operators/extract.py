@@ -42,8 +42,6 @@ from pyspark.sql import DataFrame
 
 from pdf_metadata_extraction_spark.schemas import TOKENS
 
-WS_RE = re.compile(r"\s+")
-
 # tags whose entire subtree is boilerplate for Common-Crawl-style pages
 _STRIP_TAGS = {
     "script", "style", "nav", "header", "footer", "aside", "noscript",
@@ -64,7 +62,9 @@ _PAGE_W, _PAGE_H = 612.0, 792.0
 
 
 def normalize_ws(s: str) -> str:
-    return WS_RE.sub(" ", s).strip()
+    """Fold whitespace runs to one space and strip the ends. ``str.split``
+    and ``re``'s ``\\s`` agree on every code point (``str.isspace``)."""
+    return " ".join(s.split())
 
 
 def tokens_to_text(token_texts: list[str]) -> str:

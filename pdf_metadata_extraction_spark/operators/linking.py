@@ -12,28 +12,30 @@ Reference semantics (pinned by /root/reference/src/tests/test_end_to_end.py):
 
 Spark shape: ``segments ⋈ broadcast(options)`` — the dictionary is always
 the small side (10²-10⁵ labels), so this is a **broadcast join**; the
-match predicate itself runs as a vectorized batch matcher inside a
-mapInArrow stage (precompiled alternation regex per extraction_name — no
-per-row Python interpretation of the dictionary). Only the text and
-extraction_name columns leave Arrow; every other column passes through
-as the Arrow arrays it came in.
+match predicate runs as ONE scalar Arrow UDF over ``(text,
+extraction_name)`` (precompiled alternation regex per extraction_name —
+no per-row Python interpretation of the dictionary). Only those two
+columns cross into Python and only ``values`` comes back; every other
+segment column stays in the JVM, and columns no consumer reads are
+pruned.
 
 At 100 TB the broadcast is built once per extraction; matching stays in
-the Arrow stage with the segment scan's partitioning (no shuffle).
+the segment scan's stage with its partitioning (no shuffle).
 """
 
 from __future__ import annotations
 
 import functools
 import re
-from collections.abc import Iterator
 
 _lru_cache_small = functools.lru_cache(maxsize=256)
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from pdf_metadata_extraction_spark.schemas import arrow_schema
+from pdf_metadata_extraction_spark.schemas import VALUE, arrow_schema
 
 MATCH_OPEN = '<span class="ix_match">'
 MATCH_CLOSE = "</span>"
@@ -56,9 +58,8 @@ def highlight(text: str, start: int, end: int) -> str:
 @_lru_cache_small
 def _ids_by_label(options: tuple[tuple[str, str], ...]) -> dict[str, str]:
     """Label → option id in the canonical resolution order (option_id
-    sort, FIRST id per label). The ONE source of truth shared by
-    match_options (the spec) and link_options' vectorized gate — the
-    two cannot diverge. Cached per dictionary; callers must not mutate."""
+    sort, FIRST id per label). Cached per dictionary; callers must not
+    mutate."""
     seen: dict[str, str] = {}
     for oid, label in sorted(options, key=lambda o: o[0]):
         if label and label not in seen:
@@ -66,19 +67,23 @@ def _ids_by_label(options: tuple[tuple[str, str], ...]) -> dict[str, str]:
     return seen
 
 
-def _unique_labels(options: tuple[tuple[str, str], ...]) -> tuple[str, ...]:
-    return tuple(_ids_by_label(options))
-
-
 @_lru_cache_small
 def _alternation(labels: tuple[str, ...]) -> re.Pattern:
     """ONE precompiled alternation over the whole dictionary — a single
     scan of the text replaces one regex pass per label (SURVEY §7.3 #6:
     batched matching, no per-label loops in the hot path). Longer labels
-    first so they win at a shared start position."""
+    first so they win at a shared start position.
+
+    Each branch opens with the label's first literal character, and the
+    left word boundary is checked after it by a width-2 lookbehind (the
+    char before the label must not be a word char): with a literal first
+    character, ``re`` skips ahead to candidate characters instead of
+    trying every text position."""
     ordered = sorted((l for l in labels if l), key=lambda l: (-len(l), l))
-    body = "|".join(re.escape(l) for l in ordered)
-    return re.compile(rf"(?<!\w)(?:{body})(?!\w)")
+    body = "|".join(
+        re.escape(l[0]) + r"(?<!\w(?s:.))" + re.escape(l[1:]) for l in ordered
+    )
+    return re.compile(rf"(?:{body})(?!\w)")
 
 
 # ------------------------------------------------------------ fuzzy tier
@@ -175,18 +180,24 @@ def _fuzzy_body(label: str) -> str | None:
 def _fuzzy_alternation(
     labels: tuple[str, ...],
 ) -> tuple[re.Pattern, dict[str, str]] | None:
-    """ONE alternation over folded labels with a named group per label so
-    the match resolves to its source label in the same pass."""
+    """ONE alternation over folded labels. Like ``_alternation``, each
+    branch opens with its first literal character and checks the left
+    boundary in a width-2 lookbehind; an empty named group closes each
+    branch, so ``m.lastgroup`` resolves the match to its source label in
+    the same pass."""
     ordered = sorted((l for l in labels if l), key=lambda l: (-len(l), l))
     parts, by_group = [], {}
     for i, lab in enumerate(ordered):
         body = _fuzzy_body(lab)
         if body:
-            parts.append(f"(?P<g{i}>{body})")
+            # body[0] is a literal: folded tokens are [0-9a-z]+
+            parts.append(
+                body[0] + r"(?<![0-9a-z](?s:.))" + body[1:] + f"(?P<g{i}>)"
+            )
             by_group[f"g{i}"] = lab
     if not parts:
         return None
-    pat = re.compile(r"(?<![0-9a-z])(?:" + "|".join(parts) + r")(?![0-9a-z])")
+    pat = re.compile("(?:" + "|".join(parts) + r")(?![0-9a-z])")
     return pat, by_group
 
 
@@ -268,75 +279,27 @@ def link_options(
     ).collect():
         mv, opts = dict_by_name.setdefault(r["extraction_name"], (bool(r["multi_value"]), []))
         opts.append((r["option_id"], r["label"]))
-    bc = spark.sparkContext.broadcast(dict_by_name)
-
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        list(segments.schema.fields)
-        + [
-            T.StructField(
-                "values",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("id", T.StringType()),
-                            T.StructField("label", T.StringType()),
-                            T.StructField("segment_text", T.StringType()),
-                        ]
-                    )
-                ),
-            )
-        ]
+    # tuples: match_options keys its per-dictionary caches on them
+    bc = spark.sparkContext.broadcast(
+        {name: (mv, tuple(opts)) for name, (mv, opts) in dict_by_name.items()}
     )
-    values_field = arrow_schema(spark, out_schema).field("values")
+    values_type = T.ArrayType(VALUE)
+    arrow_type = arrow_schema(
+        spark, T.StructType([T.StructField("values", values_type)])
+    ).field("values").type
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def link(texts: pa.Array, names: pa.Array) -> pa.Array:
         d = bc.value
-        for batch in batches:
-            n = batch.num_rows
-            vals: list[list] = [[] for _ in range(n)]
-            texts = batch.column(text_col).to_pandas().fillna("").astype(str)
-            names = batch.column("extraction_name").to_pandas()
-            # vectorized tier gate (round-2 verdict #6): ONE C-speed
-            # Series.str pass per dictionary decides which rows can match
-            # at all (exact alternation on the raw text, fuzzy
-            # alternation on the folded+mark-stripped text — the exact
-            # inputs match_options scans), so the per-row Python spec
-            # only runs on rows with a hit. Web corpora are sparse in
-            # dictionary hits, so this removes the per-row hot path.
-            for name, idx in names.groupby(names, sort=False).indices.items():
-                mv, opts = d.get(name, (True, []))
-                labels = _unique_labels(tuple(opts))
-                if not labels:
-                    continue
-                t = texts.iloc[idx]
-                need = t.str.contains(_alternation(labels))
-                if fuzzy:
-                    fz = _fuzzy_alternation(labels)
-                    if fz is not None:
-                        stripped = t.str.translate(_FOLD_TABLE).str.replace(
-                            _MARK_SENTINEL, "", regex=False
-                        )
-                        import warnings
+        vals = []
+        for text, name in zip(texts.to_pylist(), names.to_pylist()):
+            mv, opts = d.get(name, (True, []))
+            vals.append(match_options(text or "", opts, mv, fuzzy=fuzzy))
+        return pa.array(vals, type=arrow_type)
 
-                        with warnings.catch_warnings():
-                            # the alternation's named groups are for the
-                            # spec's label resolution; the gate only
-                            # needs the boolean — silence pandas' hint
-                            warnings.filterwarnings(
-                                "ignore", message="This pattern is interpreted"
-                            )
-                            need = need | stripped.str.contains(fz[0])
-                for i, hit in zip(idx, need.to_numpy()):
-                    if hit:
-                        vals[i] = match_options(
-                            texts.iloc[i], opts, mv, fuzzy=fuzzy
-                        )
-            # input columns pass through as the Arrow arrays they came in
-            yield pa.RecordBatch.from_arrays(
-                batch.columns + [pa.array(vals, type=values_field.type)],
-                schema=batch.schema.append(values_field),
-            )
-
-    return segments.mapInArrow(run, schema=out_schema)
+    # nondeterministic: otherwise the optimizer copies the UDF into a
+    # caller's `size(values) > 0` filter pushed below this projection,
+    # and every row is matched twice (a second ArrowEvalPython)
+    link_udf = F.arrow_udf(link, values_type).asNondeterministic()
+    return segments.withColumn(
+        "values", link_udf(F.col(text_col), F.col("extraction_name"))
+    )

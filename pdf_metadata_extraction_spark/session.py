@@ -5,8 +5,9 @@ Design notes (100 TB target):
   (mega-domain skew is expected in Common-Crawl-style inputs; the
   reference has no analogue — SURVEY.md §4).
 - Arrow on, bounded batch size: every Python kernel in this engine is a
-  vectorized mapInArrow / pandas UDF / mapInPandas / applyInPandas
-  stage; per-row Python UDFs are banned (BASELINE.json input_hint).
+  vectorized mapInArrow / Arrow UDF / pandas UDF / mapInPandas /
+  applyInPandas stage; per-row Python UDFs are banned (BASELINE.json
+  input_hint).
 - shuffle partitions default to cores locally; on a real cluster set
   ``spark.sql.shuffle.partitions`` ~ 2-3x total cores and rely on AQE
   coalescing.

@@ -315,9 +315,9 @@ def test_delete_extractor(tmp_path):
 
 
 def test_link_options_gate_equals_per_row_spec(spark):
-    """The vectorized tier gate in link_options must be invisible: output
-    identical to applying match_options per row (mixed dictionaries,
-    fuzzy-only hits, decomposed unicode, and no-match rows in one run)."""
+    """link_options output must be identical to applying match_options
+    per row (mixed dictionaries, fuzzy-only hits, decomposed unicode, and
+    no-match rows in one run)."""
     from pdf_metadata_extraction_spark.operators.linking import (
         link_options,
         match_options,

@@ -379,3 +379,36 @@ def test_priority_sample_has_no_stratum_sized_window(spark):
     for spec in specs:
         assert "_pid#" in spec, plan
         assert "grp#" not in spec, plan
+
+
+def test_link_options_ships_only_text_and_name_to_python(spark):
+    """The linker is one scalar Arrow UDF over (text, extraction_name):
+    a caller's `size(values) > 0` filter plans exactly one
+    ArrowEvalPython (the UDF is not copied into the pushed-down filter)
+    and no MapInArrow, and boxes and the other segment columns stay in
+    the JVM."""
+    import re
+
+    from pyspark.sql import types as T
+
+    from pdf_metadata_extraction_spark.operators.linking import link_options
+    from pdf_metadata_extraction_spark.schemas import SEGMENTS
+
+    segs = spark.createDataFrame(
+        [("u", 0, 1, "spark here", "Text", [], False, 10.0, 0.0, "e")],
+        T.StructType(
+            SEGMENTS.fields + [T.StructField("extraction_name", T.StringType())]
+        ),
+    )
+    opts = spark.createDataFrame(
+        [("e", "o1", "spark", True)],
+        "extraction_name string, option_id string, label string, multi_value boolean",
+    )
+    plan = _plan(link_options(segs, opts).where(F.size("values") > 0))
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "MapInArrow" not in plan, plan
+    (line,) = [l for l in plan.splitlines() if "ArrowEvalPython" in l]
+    (args,) = re.findall(r"ArrowEvalPython \[\w+\(([^)]*)\)", line)
+    assert sorted(a.split("#")[0].strip() for a in args.split(",")) == [
+        "extraction_name", "text",
+    ], line

@@ -5,7 +5,7 @@ testing' there). Pure-python kernels: no Spark session needed."""
 import html as htmllib
 import re
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from pdf_metadata_extraction_spark.operators.extract import (
@@ -124,7 +124,7 @@ def test_vectorized_proximity_clusters_equals_reference(toks):
     """The numpy kernel must produce byte-identical clusters to the
     pure-Python pair scan it replaced (same window-break semantics)."""
     from pdf_metadata_extraction_spark.operators.segment import (
-        _proximity_clusters,
+        _proximity_clusters_np,
         _proximity_clusters_py,
     )
 
@@ -133,7 +133,7 @@ def test_vectorized_proximity_clusters_equals_reference(toks):
              font_id="f", font_size=fsz, bold=False)
         for i, (p, l, t, w, h, fsz) in enumerate(toks)
     ]
-    assert _proximity_clusters(tokens) == _proximity_clusters_py(tokens)
+    assert _proximity_clusters_np(tokens) == _proximity_clusters_py(tokens)
 
 
 def test_proximity_cluster_chunking_path(monkeypatch):
@@ -150,7 +150,98 @@ def test_proximity_cluster_chunking_path(monkeypatch):
     ]
     expected = seg._proximity_clusters_py(tokens)
     monkeypatch.setattr(seg, "_PAIR_CHUNK", 7)
-    assert seg._proximity_clusters(tokens) == expected
+    assert seg._proximity_clusters_np(tokens) == expected
+
+
+def test_proximity_clusters_dispatch_on_size(monkeypatch):
+    """``_proximity_clusters`` runs the reference scan at or below
+    SMALL_CLUSTER_N tokens and the numpy kernel above it, with the same
+    clusters either way."""
+    from pdf_metadata_extraction_spark.operators import segment as seg
+
+    def tokens(n):
+        return [
+            dict(page=1 + i % 2, token_idx=i, text="w", left=(i % 5) * 40.0,
+                 top=(i // 5) * 13.0, width=35.0, height=10.0,
+                 font_id="f", font_size=10.0, bold=False)
+            for i in range(n)
+        ]
+
+    calls = []
+    for name in ("_proximity_clusters_py", "_proximity_clusters_np"):
+        real = getattr(seg, name)
+        monkeypatch.setattr(
+            seg, name, lambda t, real=real, name=name: calls.append(name) or real(t)
+        )
+    for n, kernel in ((seg.SMALL_CLUSTER_N, "_proximity_clusters_py"),
+                      (seg.SMALL_CLUSTER_N + 1, "_proximity_clusters_np")):
+        calls.clear()
+        got = seg._proximity_clusters(tokens(n))
+        assert calls == [kernel]
+        assert got == seg._proximity_clusters_py(tokens(n))
+
+
+# The lookbehind-first alternations that linking.py's literal-first ones
+# replaced, kept as the reference they must equal.
+def _alternation_ref(labels):
+    ordered = sorted((l for l in labels if l), key=lambda l: (-len(l), l))
+    body = "|".join(re.escape(l) for l in ordered)
+    return re.compile(rf"(?<!\w)(?:{body})(?!\w)")
+
+
+def _fuzzy_alternation_ref(labels):
+    from pdf_metadata_extraction_spark.operators.linking import _fuzzy_body
+
+    ordered = sorted((l for l in labels if l), key=lambda l: (-len(l), l))
+    parts, by_group = [], {}
+    for i, lab in enumerate(ordered):
+        body = _fuzzy_body(lab)
+        if body:
+            parts.append(f"(?P<g{i}>{body})")
+            by_group[f"g{i}"] = lab
+    if not parts:
+        return None
+    pat = re.compile(r"(?<![0-9a-z])(?:" + "|".join(parts) + r")(?![0-9a-z])")
+    return pat, by_group
+
+
+_REGEX_LABELS = [
+    ".net", "#tag", "ab", "Ab c", "a", "b.c", "c-1", "\u00e9s", "e\u0301s",
+    "abs", "x\ny", "\na", "\x01a", "1b", "_a",
+]
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    st.lists(st.sampled_from(_REGEX_LABELS), min_size=1, max_size=5, unique=True),
+    st.text(alphabet="aAbcegnstxy1 .#-_\n\x01\u0301\u00e9", max_size=30),
+    st.booleans(),
+)
+@example(["\na"], "b\na", False)  # the boundary char before a newline
+@example([".net", "#tag"], "x.net #tag", True)
+def test_literal_first_alternations_equal_reference(labels, text, lead):
+    """The literal-first ``_alternation`` / ``_fuzzy_alternation`` give
+    the same (label, span) sequence as the lookbehind-first patterns,
+    exact tier on the raw text and fuzzy tier on the folded text."""
+    from pdf_metadata_extraction_spark.operators.linking import (
+        _alternation,
+        _fuzzy_alternation,
+        fold_strip,
+    )
+
+    if lead:  # a label at position 0
+        text = labels[0] + text
+    labels = tuple(labels)
+    assert [(m.group(0), m.span()) for m in _alternation(labels).finditer(text)] == [
+        (m.group(0), m.span()) for m in _alternation_ref(labels).finditer(text)
+    ]
+    new, ref = _fuzzy_alternation(labels), _fuzzy_alternation_ref(labels)
+    assert (new is None) == (ref is None)
+    if new is not None:
+        folded = fold_strip(text)[0]
+        assert [(new[1][m.lastgroup], m.span()) for m in new[0].finditer(folded)] == [
+            (ref[1][m.lastgroup], m.span()) for m in ref[0].finditer(folded)
+        ]
 
 
 @settings(max_examples=160, deadline=None)

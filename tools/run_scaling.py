@@ -51,7 +51,7 @@ def gen_pages(n_pages: int) -> str:
         from pdf_metadata_extraction_spark.session import get_spark
         from pdf_metadata_extraction_spark.sources.pages_synth import write_pages
 
-        spark = get_spark(app_name="gen", master="local[32]")
+        spark = get_spark(app_name="gen")
         spark.sparkContext.setLogLevel("ERROR")
         write_pages(spark, pages_dir, n_pages)
         spark.stop()
