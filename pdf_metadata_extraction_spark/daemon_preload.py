@@ -1,6 +1,6 @@
 """Python worker daemon that pays per-worker and per-task set-up once.
 
-The pyspark daemon forks one worker per concurrent task. Two set-up
+The pyspark daemon forks one worker per concurrent task. Three set-up
 costs are moved out of the forked workers:
 
 1. **Heavy imports.** pandas/pyarrow/numpy and the engine's own kernels
@@ -18,6 +18,17 @@ costs are moved out of the forked workers:
    happen only when the archive's ``(st_mtime_ns, st_size)`` changed.
    Python 3.12 made the re-read lazy (CPython gh-103200), so there the
    guard does nothing.
+3. **Garbage-collector walks of the inherited heap.** After every task
+   of a reused worker the daemon calls ``gc.collect()``, which walks
+   every GC-tracked object the worker holds: ~74k of them inherited
+   from the preload imports, 38-42 ms of CPU each time, measured on
+   Python 3.11 (an empty ``mapInArrow`` task cost ~45 ms of worker
+   CPU). ``gc.freeze()`` right before ``manager()`` moves the inherited
+   heap into the permanent generation, CPython's documented recipe for
+   forking servers, so the collections walk only what the tasks
+   themselves allocated (~4 ms per empty task). Frozen objects are
+   never collected; they are module state that lives as long as the
+   worker anyway.
 
 Opt in with ``spark.python.daemon.module =
 pdf_metadata_extraction_spark.daemon_preload`` (``session.get_spark``
@@ -25,6 +36,7 @@ sets it for ``local`` masters; env-overridable). The module must be
 importable on every worker host: true for local mode and for any
 cluster that ships the package."""
 
+import gc
 import os
 import sys
 import zipimport
@@ -84,4 +96,5 @@ def guard_zip_directories() -> None:
 
 if __name__ == "__main__":
     guard_zip_directories()
+    gc.freeze()
     manager()

@@ -19,6 +19,11 @@ reuse. Two content types are sniffed per row:
 - web HTML → boilerplate strip (script/style/nav/header/footer/aside
   subtrees dropped) + block-level text emission in reading order with
   synthetic geometry (block index → top), tag → segment_type hint.
+  The fused segments stage (``plans.pipeline.segments_from_pages``)
+  skips the synthetic geometry for web pages: it segments the blocks
+  directly (``segment.html_blocks_to_segments``, equal by construction
+  and property test). ``tokenize_bytes`` still emits the geometry for
+  ``extract_tokens`` and the text path.
 
 The per-row invariant (BASELINE.json input_hint): ``extract_text`` must
 reproduce ``pages.text`` **byte-identically** — pinned by

@@ -23,6 +23,13 @@ Semantics (locked by our golden tests):
 6. ``is_label`` = any member token intersects a (×0.75-ingested) label
    box — J2.
 
+Web pages have no real geometry: ``extract.html_blocks_to_tokens``
+lays blocks out on a synthetic grid whose only signal is "adjacent
+``li`` blocks are one list". For web pages without segment or label
+boxes, ``html_blocks_to_segments`` applies that rule in one pass over
+the blocks, skipping the synthetic tokens, the sort and the clustering;
+it is property-tested equal to ``segment_doc(html_blocks_to_tokens(b))``.
+
 Spark shape: the kernel is document-local, so it runs inside the same
 Arrow batch as extraction (the fused mapInArrow stage
 ``plans.pipeline.segments_from_pages``) — **zero shuffle**.
@@ -31,7 +38,12 @@ Arrow batch as extraction (the fused mapInArrow stage
 from __future__ import annotations
 
 from pdf_metadata_extraction_spark.operators.boxes import boxes_intersect
-from pdf_metadata_extraction_spark.operators.extract import tokens_to_text
+from pdf_metadata_extraction_spark.operators.extract import (
+    _LINE_H,
+    _PAGE_W,
+    _TITLE_TAGS,
+    tokens_to_text,
+)
 
 V_GAP_MIN = 6.0
 V_GAP_FACTOR = 1.5
@@ -39,6 +51,7 @@ H_GAP_SAMELINE = 18.0
 LINE_TOP_TOL = 3.0
 
 TITLE_FONT_FACTOR = 1.4
+_BULLETS = ("●", "•", "-", "*")
 
 
 class _UF:
@@ -291,7 +304,7 @@ def _proximity_clusters_np(tokens: list[dict]) -> list[list[int]]:
 
 def _heuristic_type(members: list[dict], median_font: float) -> str:
     texts = " ".join((t["text"] or "") for t in members).strip()
-    if texts.startswith(("●", "•", "-", "*")):
+    if texts.startswith(_BULLETS):
         return "List item"
     sizes = [t.get("font_size") or 0.0 for t in members]
     avg = sum(sizes) / len(sizes) if sizes else 0.0
@@ -365,3 +378,81 @@ def segment_doc(
         sid += 1
     return segments
 
+
+
+def html_blocks_to_segments(blocks: list[tuple[str, str]]) -> list[dict]:
+    """Web-page segmentation in one pass over the blocks: equal to
+    ``segment_doc(html_blocks_to_tokens(blocks), [], [], (0.0, 0.0))``
+    without building the synthetic tokens or clustering them.
+
+    On that geometry the proximity clusterer links exactly the adjacent
+    ``li`` pairs whose texts are both non-empty (the only pairs that sit
+    one line apart and overlap in x), so each maximal such ``li`` run is
+    one segment with one line box per inked block, and every other block
+    is a segment of its own. The heuristic type reduces to: a bullet
+    prefix → "List item"; else an ``h1``-``h6`` block under 120 chars →
+    "Title" (bold); else "Text" (body font below the title ratio).
+    Property-tested equal to the token path for arbitrary block lists."""
+    segments: list[dict] = []
+    height = _LINE_H * 0.6
+    max_width = _PAGE_W - 144.0
+
+    def emit(members: list[tuple[float, str]], title: bool) -> None:
+        texts = [t for _, t in members]
+        text = tokens_to_text(texts)
+        if not text:
+            return
+        raw = " ".join(texts).strip()
+        if raw.startswith(_BULLETS):
+            seg_type = "List item"
+        elif title and len(raw) < 120:
+            seg_type = "Title"
+        else:
+            seg_type = "Text"
+        boxes = []
+        for top, t in members:
+            if not t.strip():
+                continue
+            right = 72.0 + min(6.0 * len(t), max_width)
+            boxes.append(
+                {
+                    "left": 72.0,
+                    "top": top,
+                    "width": right - 72.0,
+                    "height": (top + height) - top,
+                    "page_width": 0.0,
+                    "page_height": 0.0,
+                    "page_number": 1,
+                    "segment_type": None,
+                }
+            )
+        segments.append(
+            {
+                "segment_id": len(segments),
+                "page": 1,
+                "text": text,
+                "segment_type": seg_type,
+                "boxes": boxes,
+                "is_label": False,
+                "font_size": 20.0 if title else 10.0,
+                "bold_ratio": 1.0 if title else 0.0,
+            }
+        )
+
+    run: list[tuple[float, str]] = []  # the open run of non-empty li blocks
+    top = 72.0
+    prev_tag = None
+    for i, (tag, txt) in enumerate(blocks):
+        if i > 0:
+            top += _LINE_H if (prev_tag == "li" and tag == "li") else 2 * _LINE_H
+        prev_tag = tag
+        if tag == "li" and txt:
+            run.append((top, txt))
+            continue
+        if run:
+            emit(run, False)
+            run = []
+        emit([(top, txt)], tag in _TITLE_TAGS)
+    if run:
+        emit(run, False)
+    return segments

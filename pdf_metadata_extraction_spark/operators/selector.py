@@ -34,7 +34,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_WORD_RE = re.compile(r"[a-zA-Z]{2,}")
 N_FEATURES = 38
 _CTX_COLS = [
     "n_segs", "max_page", "mean_len", "prev_type", "next_type",

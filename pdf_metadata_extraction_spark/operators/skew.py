@@ -39,14 +39,6 @@ def with_salt(df: DataFrame, key: str | Column, n_salt: int = DEFAULT_SALT,
     )
 
 
-def salted_repartition(df: DataFrame, key: str, n_salt: int = DEFAULT_SALT,
-                       num_partitions: int | None = None) -> DataFrame:
-    salted = with_salt(df, key, n_salt)
-    if num_partitions:
-        return salted.repartition(num_partitions, F.col(key), F.col("salt"))
-    return salted.repartition(F.col(key), F.col("salt"))
-
-
 def salted_groupby_count(df: DataFrame, key: str, n_salt: int = DEFAULT_SALT,
                          salt_src: str = "url") -> DataFrame:
     """Two-phase skew-safe count per key: partial per (key, salt) — the

@@ -35,12 +35,19 @@ from pyspark.sql import functions as F
 
 from pdf_metadata_extraction_spark.operators import methods as M
 from pdf_metadata_extraction_spark.operators.boxes import scale_down_labels
-from pdf_metadata_extraction_spark.operators.extract import tokenize_bytes
+from pdf_metadata_extraction_spark.operators.extract import (
+    is_pdf2xml,
+    parse_html_blocks,
+    tokenize_bytes,
+)
 from pdf_metadata_extraction_spark.operators.linking import (
     link_options,
     plain_paragraph,
 )
-from pdf_metadata_extraction_spark.operators.segment import segment_doc
+from pdf_metadata_extraction_spark.operators.segment import (
+    html_blocks_to_segments,
+    segment_doc,
+)
 from pdf_metadata_extraction_spark.operators.selector import (
     best_segment_per_doc,
     frequent_words,
@@ -82,6 +89,11 @@ def segments_from_pages(
     ``page_range``: F2 valid-pages filter — tokens outside the learned
     (lo, hi) page window are dropped *before* segmentation (the
     reference prunes pages before parse, SampleProcessorUseCase.py:28,51).
+
+    Web pages without segment or label boxes skip the synthetic token
+    geometry: ``html_blocks_to_segments`` gives the same segments in one
+    pass over the blocks (all on page 1). pdf2xml pages and pages with
+    boxes go through ``tokenize_bytes`` → ``segment_doc``.
     """
     cols = ["url", "html"]
     has_seg = "xml_segments_boxes" in pages_with_boxes.columns
@@ -92,6 +104,7 @@ def segments_from_pages(
         cols.append("label_segments_boxes")
     df = pages_with_boxes.select(*cols)
     out_schema = arrow_schema(df.sparkSession, SEGMENTS)
+    web_in_range = page_range is None or page_range[0] <= 1 <= page_range[1]
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -102,18 +115,25 @@ def segments_from_pages(
             lbs = batch.column("label_segments_boxes").to_pylist() if has_label else none
             rows = []
             for url, data, sb, lb in zip(urls, htmls, sbs, lbs):
-                toks = tokenize_bytes(data)
-                if page_range is not None:
-                    toks = [
-                        t for t in toks
-                        if page_range[0] <= t["page"] <= page_range[1]
-                    ]
                 sb = sb or []
                 lb = lb or []
-                dims = (0.0, 0.0)
-                if sb and sb[0].get("page_width"):
-                    dims = (sb[0]["page_width"], sb[0]["page_height"])
-                for s in segment_doc(toks, sb, lb, dims):
+                if data and not sb and not lb and not is_pdf2xml(data):
+                    segs = (
+                        html_blocks_to_segments(parse_html_blocks(data))
+                        if web_in_range else []
+                    )
+                else:
+                    toks = tokenize_bytes(data)
+                    if page_range is not None:
+                        toks = [
+                            t for t in toks
+                            if page_range[0] <= t["page"] <= page_range[1]
+                        ]
+                    dims = (0.0, 0.0)
+                    if sb and sb[0].get("page_width"):
+                        dims = (sb[0]["page_width"], sb[0]["page_height"])
+                    segs = segment_doc(toks, sb, lb, dims)
+                for s in segs:
                     s["url"] = url
                     rows.append(s)
             yield pa.RecordBatch.from_pylist(rows, schema=out_schema)

@@ -15,19 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-# ---------------------------------------------------------------- pages
-# input_hint shape; reference analogue: one poppler-XML document per
-# xml_file_name (reference: src/drivers/rest/app.py:71-98).
-PAGES = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), True),
-        T.StructField("html", T.BinaryType(), True),
-        T.StructField("text", T.StringType(), True),  # golden extracted text
-        T.StructField("lang", T.StringType(), True),
-    ]
-)
-
 # ---------------------------------------------------------------- tokens
 # reference analogue: pdf2xml <text top left width height font> rows
 # (reference fixture: src/tests/resources/.../xml_to_train/test.xml:20-140).
@@ -59,20 +46,6 @@ SEGMENT_BOX = T.StructType(
         T.StructField("page_width", T.DoubleType(), True),
         T.StructField("page_height", T.DoubleType(), True),
         T.StructField("page_number", T.IntegerType(), True),
-        T.StructField("segment_type", T.StringType(), True),
-    ]
-)
-
-SEGMENT_BOXES_TABLE = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("page_number", T.IntegerType(), False),
-        T.StructField("left", T.DoubleType(), True),
-        T.StructField("top", T.DoubleType(), True),
-        T.StructField("width", T.DoubleType(), True),
-        T.StructField("height", T.DoubleType(), True),
-        T.StructField("page_width", T.DoubleType(), True),
-        T.StructField("page_height", T.DoubleType(), True),
         T.StructField("segment_type", T.StringType(), True),
     ]
 )
@@ -175,26 +148,6 @@ TRIPLES = T.StructType(
     ]
 )
 
-# ---------------------------------------------------------------- graph
-NODES = T.StructType(
-    [
-        T.StructField("node_id", T.StringType(), False),
-        T.StructField("canonical_id", T.StringType(), False),
-        T.StructField("surface_form", T.StringType(), True),
-        T.StructField("node_type", T.StringType(), True),
-    ]
-)
-
-EDGES = T.StructType(
-    [
-        T.StructField("subj", T.StringType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("obj", T.StringType(), False),
-        T.StructField("provenance_url", T.StringType(), True),
-        T.StructField("segment_text", T.StringType(), True),
-    ]
-)
-
 # ---------------------------------------------------------------- lineage
 # generalizes the reference's last-run metadata {timestamp, sample_count}
 # (src/use_cases/SamplesCacheUseCase.py:60-76) to per-stage,
@@ -209,17 +162,6 @@ LINEAGE = T.StructType(
         T.StructField("output_rows", T.LongType(), True),
         T.StructField("wall_ms", T.LongType(), True),
         T.StructField("ts", T.TimestampType(), True),
-    ]
-)
-
-# ---------------------------------------------------------------- paragraphs
-PARAGRAPHS = T.StructType(
-    [
-        T.StructField("key", T.StringType(), False),
-        T.StructField("lang", T.StringType(), False),
-        T.StructField("position", T.IntegerType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("needs_user_review", T.BooleanType(), True),
     ]
 )
 

@@ -8,7 +8,9 @@ Design notes (100 TB target):
   vectorized mapInArrow / Arrow UDF / pandas UDF / mapInPandas /
   applyInPandas stage; per-row Python UDFs are banned (BASELINE.json
   input_hint).
-- shuffle partitions default to cores locally; on a real cluster set
+- ``local[N]`` defaults to the cores this process may run on
+  (``SPARK_GRAFT_CPUS`` overrides); shuffle partitions default to the
+  same N locally; on a real cluster set
   ``spark.sql.shuffle.partitions`` ~ 2-3x total cores and rely on AQE
   coalescing.
 """
@@ -37,13 +39,19 @@ def python_daemon_module(master: str) -> str | None:
     return daemon or None
 
 
+def default_cpus() -> int:
+    """``SPARK_GRAFT_CPUS``, else the usable core count (the process's
+    CPU affinity, which respects container and taskset limits)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "pdf_metadata_extraction_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
     # make the package importable in python WORKER processes no matter

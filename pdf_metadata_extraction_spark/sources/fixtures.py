@@ -39,41 +39,6 @@ def fixture_docs() -> dict:
         return json.load(fh)
 
 
-def fixture_token_rows(url_prefix: str = "https://fixtures.example.org/") -> list[dict]:
-    """Flatten fixtures to rows matching schemas.TOKENS (url = prefix + name)."""
-    rows = []
-    for name, pages in fixture_docs().items():
-        url = url_prefix + name
-        for page in pages:
-            for tok in page["tokens"]:
-                rows.append(
-                    {
-                        "url": url,
-                        "page": int(tok["page"]),
-                        "token_idx": int(tok["token_idx"]),
-                        "text": tok["text"],
-                        "left": float(tok["left"]),
-                        "top": float(tok["top"]),
-                        "width": float(tok["width"]),
-                        "height": float(tok["height"]),
-                        "font_id": tok["font_id"],
-                        "font_size": float(tok.get("font_size", 0.0)),
-                        "bold": bool(tok["bold"]),
-                    }
-                )
-    return rows
-
-
-def fixture_page_dims() -> dict[str, tuple[float, float]]:
-    dims = {}
-    for name, pages in fixture_docs().items():
-        if pages:
-            dims[name] = (pages[0]["width"], pages[0]["height"])
-        else:
-            dims[name] = (0.0, 0.0)
-    return dims
-
-
 def fixture_pdf2xml_bytes(name: str) -> bytes:
     """Re-serialize a fixture doc to pdf2xml-shaped bytes.
 

@@ -9,6 +9,8 @@ from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from pdf_metadata_extraction_spark.operators.extract import (
+    _BLOCK_TAGS,
+    html_blocks_to_tokens,
     normalize_ws,
     parse_html_blocks,
     parse_html_blocks_fast,
@@ -16,7 +18,10 @@ from pdf_metadata_extraction_spark.operators.extract import (
     tokens_to_text,
 )
 from pdf_metadata_extraction_spark.operators.linking import match_options
-from pdf_metadata_extraction_spark.operators.segment import segment_doc
+from pdf_metadata_extraction_spark.operators.segment import (
+    html_blocks_to_segments,
+    segment_doc,
+)
 
 # text without markup characters (what lands between tags)
 plain_text = st.text(
@@ -179,6 +184,40 @@ def test_proximity_clusters_dispatch_on_size(monkeypatch):
         got = seg._proximity_clusters(tokens(n))
         assert calls == [kernel]
         assert got == seg._proximity_clusters_py(tokens(n))
+
+
+# block texts for the web segmenter: empty, whitespace-only, bullet
+# prefixes, free text, and lengths around the 120-char title limit and
+# the 78-char (468 pt) width cap
+_block_text = st.one_of(
+    st.just(""),
+    st.text(alphabet=" \t\n\x1c\u00a0\u2003", min_size=1, max_size=4),
+    st.builds(
+        lambda bullet, rest: bullet + rest,
+        st.sampled_from(["●", "•", "-", "*", " - ", "\t*"]),
+        st.text(max_size=20),
+    ),
+    st.text(max_size=40),
+    st.text(alphabet="ab -", min_size=70, max_size=130),
+)
+_web_block = st.tuples(
+    st.one_of(st.just("li"), st.sampled_from(sorted(_BLOCK_TAGS))), _block_text
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_web_block, max_size=40))
+@example([("li", f"item {i}") for i in range(20)] + [("li", "")]
+         + [("li", f"more {i}") for i in range(20)])
+@example([("h1", "t" * 119), ("h2", "t" * 120), ("h3", " " + "t" * 119 + " "),
+          ("p", "w" * 78), ("li", "w" * 79), ("li", "  "), ("li", "- x"),
+          ("h6", "* not a title"), ("td", ""), ("li", " \t"), ("li", "z")])
+def test_html_blocks_to_segments_equals_token_path(blocks):
+    """The one-pass web segmenter equals segmenting the synthetic tokens
+    of the same blocks: segment text, type, boxes, fonts and ids."""
+    assert html_blocks_to_segments(blocks) == segment_doc(
+        html_blocks_to_tokens(blocks), [], [], (0.0, 0.0)
+    )
 
 
 # The lookbehind-first alternations that linking.py's literal-first ones

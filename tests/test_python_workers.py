@@ -1,11 +1,13 @@
 """Python worker set-up: the daemon's zip-directory guard
 (``importlib.invalidate_caches()``, called by ``pyspark.worker`` before
 every task, must not re-parse an unchanged zip archive, and must still
-pick up a rewritten one), the local-only daemon default, and the logged
-pool warm-up."""
+pick up a rewritten one), the frozen heap the workers inherit, the
+local-only daemon default, the default core count, and the logged pool
+warm-up."""
 
 from __future__ import annotations
 
+import gc
 import importlib
 import os
 import sys
@@ -60,6 +62,32 @@ def test_guard_skips_unchanged_archive_and_rereads_changed(tmp_path, monkeypatch
     finally:
         sys.modules.pop(MOD, None)
         sys.path_importer_cache.pop(archive, None)
+
+
+def test_preload_daemon_workers_inherit_frozen_heap(spark):
+    """Workers fork from a daemon that froze its preloaded heap, so the
+    daemon's ``gc.collect()`` after every task skips the inherited
+    objects (pandas, pyarrow, numpy, the engine: tens of thousands)."""
+    assert spark.conf.get("spark.python.daemon.module") == (
+        "pdf_metadata_extraction_spark.daemon_preload"
+    )
+    counts = (
+        spark.sparkContext.parallelize([0], 1)
+        .map(lambda _: gc.get_freeze_count())
+        .collect()
+    )
+    assert counts[0] > 10_000
+
+
+def test_default_cpus_is_usable_core_count(monkeypatch):
+    from pdf_metadata_extraction_spark.session import default_cpus
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "")
+    assert default_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == 3
 
 
 def test_daemon_default_only_on_local_master(monkeypatch):

@@ -44,8 +44,8 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from pdf_metadata_extraction_spark.session import get_spark
 
-    # local[$SPARK_GRAFT_CPUS] with as many shuffle partitions, as in
-    # get_spark(); set SPARK_GRAFT_CPUS=$(nproc) to use every core
+    # local[N] with as many shuffle partitions, as in get_spark(): N is
+    # $SPARK_GRAFT_CPUS, else every usable core
     spark = get_spark(app_name="oracle-check")
     db = duckdb.connect()
     for t in TABLES:
