@@ -67,24 +67,35 @@ from pdf_metadata_extraction_spark.operators.textstats import (  # noqa: E402
 _LANGS = list(_MARKERS)
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read an sf table; spread SUB-SPLIT inputs over the cores.
+def _t(
+    spark: SparkSession, sf_dir: str, name: str, spread: bool = False
+) -> DataFrame:
+    """Read an sf table.
 
-    Round 7 (guide §2.5, input skew): a table smaller than one scan
-    split arrives as ONE partition, so every per-row map chain built
-    on it (regex link extraction, tokenize+shingle, PII folds) runs
-    single-task regardless of cores — including the map-side partial
-    aggregation that follows. A deterministic round-robin repartition
-    to the session's parallelism costs one tiny shuffle of the raw
-    rows (~KBs here) and restores the map-side parallelism. The
-    condition is layout-derived, not a constant: any input that
-    already yields at least parallelism/4 scan tasks (every real-scale
-    table) is untouched.
+    ``spread=True`` is a per-query opt-in for CPU-heavy per-row map
+    chains (regex link extraction, tokenize+shingle). A table smaller
+    than one scan split arrives as ONE partition, so such a chain, and
+    the map-side partial aggregation behind it, runs single-task
+    whatever the core count. The opt-in round-robin repartitions it to
+    the session's parallelism, at the cost of one more shuffle stage
+    and its generated code. The condition is layout-derived: an input
+    that already yields at least parallelism/4 scan tasks (every
+    real-scale table) is left alone. Other queries read the table as
+    laid out.
+
+    An entry opts in only where an interleaved ``bench_extra.py`` A/B
+    (spread vs none, sf0.1, 4 cores) showed a wall win beyond the
+    spread of the runs: ``url_canonicalize``, ``ngram_jaccard``,
+    ``lsh_gated_jaccard``, ``full_canonicalize``, ``bm25_topk`` and
+    ``link_graph_hosts``. ``url_dedup`` and ``domain_skew_audit``
+    build on ``url_canonicalize`` but measured no win, so they do not
+    spread.
     """
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    par = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() * 4 <= par:
-        df = df.repartition(par)
+    if spread:
+        par = spark.sparkContext.defaultParallelism
+        if df.rdd.getNumPartitions() * 4 <= par:
+            df = df.repartition(par)
     return df
 
 
@@ -109,16 +120,12 @@ def _scratch_dir(prefix: str) -> str:
     import tempfile
 
     if not _SCRATCH_ROOT:
-        # round 7: checkpoint scratch prefers fast local storage (tmpfs
-        # here — /tmp sits on the hypervisor-shared disk whose stall
-        # phases dominate FS-heavy queries; see OPTIMIZATION_r07.md).
-        # The checkpoint CONTRACT (fingerprints, resume) is
-        # FS-agnostic; durable production runs pass an explicit
-        # checkpoint_dir on HDFS/S3-class storage instead.
-        base = os.environ.get(
-            "SPARK_GRAFT_SCRATCH",
-            "/dev/shm" if os.path.isdir("/dev/shm") else None,
-        )
+        # the OS temp dir unless SPARK_GRAFT_SCRATCH names faster local
+        # storage (tmpfs on a box whose /tmp disk stalls). The
+        # checkpoint CONTRACT (fingerprints, resume) is FS-agnostic;
+        # durable production runs pass an explicit checkpoint_dir on
+        # HDFS/S3-class storage instead.
+        base = os.environ.get("SPARK_GRAFT_SCRATCH") or None
         root = tempfile.mkdtemp(prefix="spark_graft_ck_", dir=base)
         _SCRATCH_ROOT.append(root)
         atexit.register(shutil.rmtree, root, ignore_errors=True)
@@ -613,7 +620,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ------------------------------------------------ dedup: ngram jaccard
     def ngram_jaccard(spark, sf_dir):
         corpus = _perturbed_corpus(
-            _t(spark, sf_dir, "documents").where("doc_id < 250")
+            _t(spark, sf_dir, "documents", spread=True).where("doc_id < 250")
         )
         return dedup.ngram_jaccard_pairs(
             corpus, "doc_id", min_jaccard=0.5, prefix_chars=80
@@ -625,7 +632,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         exact n-gram Jaccard verification restricted to candidates —
         the full self-join never happens."""
         corpus = _perturbed_corpus(
-            _t(spark, sf_dir, "documents").where("doc_id < 250")
+            _t(spark, sf_dir, "documents", spread=True).where("doc_id < 250")
         )
         sigs = minhash_signature(shingles(corpus, "doc_id", "text"), perms=4)
         cand = lsh_candidate_pairs(sigs, perms=4, bands=2)
@@ -680,7 +687,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         corpus = _doubled_corpus(
-            _t(spark, sf_dir, "documents").where("doc_id < 150")
+            _t(spark, sf_dir, "documents", spread=True).where("doc_id < 150")
         )
         return canonicalize(corpus, "doc_id", "text", perms=8, bands=4)
 
@@ -831,7 +838,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return textstats.shared_span_pairs(fps, min_shared=20, max_docs_per_fp=50)
 
     # ------------------------------------------------ URL canonicalization
-    def url_canonicalize(spark, sf_dir):
+    def url_canonicalize(spark, sf_dir, spread=True):
         """Canonicalize a deterministic dirty-URL corpus derived from
         doc_id (mixed-case hosts, default ports, www, tracking params,
         fragments, trailing slashes, unparseable rows) — pure map-only
@@ -840,7 +847,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             canonicalize_urls,
         )
 
-        d = _t(spark, sf_dir, "documents").select("doc_id")
+        d = _t(spark, sf_dir, "documents", spread=spread).select("doc_id")
         k = (F.col("doc_id") % 50).cast("string")
         m = F.col("doc_id") % 10
         raw = (
@@ -888,7 +895,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         grouping exists for (a .co.uk site no longer splits across a
         bogus 'co.uk' mega-group). Integer counts, share = n/total
         rounded 6dp (same ints -> same double on both engines)."""
-        c = url_canonicalize(spark, sf_dir)
+        c = url_canonicalize(spark, sf_dir, spread=False)
         per = (
             c.where(F.col("registered_domain").isNotNull())
             .groupBy("registered_domain")
@@ -905,7 +912,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         variants (case, ports, tracking params, userinfo) collapse onto
         one canonical_url; emits groups with >1 alias (canonical_url,
         n_aliases, first_doc)."""
-        c = url_canonicalize(spark, sf_dir)
+        c = url_canonicalize(spark, sf_dir, spread=False)
         return (
             c.where(F.col("canonical_url").isNotNull())
             .groupBy("canonical_url")
@@ -917,7 +924,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     # ------------------------------------------------ link graph
-    def _link_corpus(spark, sf_dir):
+    def _link_corpus(spark, sf_dir, spread=False):
         """Deterministic synthetic HTML corpus: every href resolution
         class represented (absolute — incl. a 3-label-public-suffix
         target — root-relative, protocol-relative, path-relative flat
@@ -927,7 +934,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         (every 7th wrapped in nested <b> markup — the full-inner-text
         extraction case), and every 3rd nav anchor rel="nofollow"
         (the follow-only edge-set case)."""
-        d = _t(spark, sf_dir, "documents").select("doc_id")
+        d = _t(spark, sf_dir, "documents", spread=spread).select("doc_id")
         k = (F.col("doc_id") % 20).cast("string")
         j = ((F.col("doc_id") + 7) % 20).cast("string")
         j2 = ((F.col("doc_id") + 3) % 20).cast("string")
@@ -988,7 +995,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             host_link_edges,
         )
 
-        return host_link_edges(_link_corpus(spark, sf_dir))
+        return host_link_edges(_link_corpus(spark, sf_dir, spread=True))
 
     def host_pagerank(spark, sf_dir):
         """The composed Common-Crawl ranking chain in ONE query:
@@ -1345,7 +1352,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from pdf_metadata_extraction_spark.operators.search import bm25_rank
 
         return bm25_rank(
-            _t(spark, sf_dir, "documents"), _BM25_TERMS, topk=15
+            _t(spark, sf_dir, "documents", spread=True), _BM25_TERMS, topk=15
         )
 
     def bm25_topk_indexed(spark, sf_dir):

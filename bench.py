@@ -396,140 +396,6 @@ def main() -> None:
         len(got_pairs & exact_pairs) / max(len(exact_pairs), 1), 4
     )
 
-    # round-over-round disclosure: intentional workload/durability
-    # deltas and measurement-method changes (not regressions — see
-    # commit history and BENCH/KG_WARM_DRIFT.md)
-    extras["notes"] = {
-        "kg_pipeline_warm": (
-            "now the MEDIAN of 5 warm runs (raw samples in "
-            "kg_pipeline_warm_runs): the r3->r4 1.85->2.7 movement was "
-            "single-sample box noise on a byte-identical pipeline "
-            "(git-diff evidence in BENCH/KG_WARM_DRIFT.md)"
-        ),
-        "graph_pagerank,host_pagerank": (
-            "per-iteration reliable FS checkpoints (executor-loss-safe, "
-            "resumable) — fixed write/read overhead dominates at sf0.1; "
-            "graph_pagerank_dangling runs WITHOUT a checkpoint_dir and "
-            "isolates the algorithm cost"
-        ),
-        "graph_*": (
-            "round 5: edge corpus now built with ONE documents scan "
-            "(array-explode) instead of a 3-way union of the same scan; "
-            "triangle_count cuts und+oriented (every shuffle exactly "
-            "once) and releases its two checkpointed RDDs by captured "
-            "id — zero storage left behind, no global-map sweep"
-        ),
-        "url_canonicalize,url_dedup,domain_skew_audit": (
-            "round 5: %-escape decode is a single split-on-% fold "
-            "(~40x fewer expression nodes than the r4 128-replace "
-            "fold; truly single-decode for malformed input) and the "
-            "corpus gained k12.ma.us-class 3-label-suffix hosts"
-        ),
-        "link_graph,anchor_*": (
-            "round 5: anchor mentions are the FULL inner text with "
-            "nested tags stripped (r4 captured only the leading text "
-            "node); corpus gained nested-markup anchors and a 3-label "
-            "public-suffix link target (7-way href cycle)"
-        ),
-        "bm25_topk_indexed": (
-            "includes building the postings index per call; "
-            "bm25_indexed_query_sec_* isolates per-query cost and "
-            "bm25_persist_*_sec shows the persisted-index lifecycle "
-            "(reuse ~= fingerprint-only, no rebuild)"
-        ),
-        "kg_run_curated_s": (
-            "round 5: NEW extras-only section — the fully-curated "
-            "production run (url dedup + quality gate + decontam + "
-            "domain cap + boilerplate-segment gate + corpus export + "
-            "sequence packing, ~22 checkpointed stages on a 2,000-page "
-            "slice). Its wall is dominated by fixed per-stage job "
-            "latency, not data (the gates keep <2% of the synthetic "
-            "slice); per-stage attribution in curated_stage_wall_ms"
-        ),
-        "box_noise": (
-            "the shared box alternates quiet/loud phases (load 0.9-6.5 "
-            "with nothing of ours running; disclosed since round 3); "
-            "loud-phase runs inflate everything 2-3x non-uniformly "
-            "(FS-heavy queries worst) — compare medians, not singles. "
-            "Round-5 quiet-phase reference at HEAD (best of 3 full "
-            "runs, same day): kg_pipeline_warm median 2.16 / min 1.74 "
-            "(r4 watch item RECOVERED; attribution in "
-            "BENCH/KG_WARM_DRIFT.md), graph_triangles 1.06, "
-            "graph_pagerank 3.32 (durable per-iteration checkpoints), "
-            "host_pagerank 2.81, url_canonicalize 0.94, pii_scrub "
-            "0.93, canonical_components 8.2, cosine_topk 0.75, "
-            "minhash_dup_pairs 0.81, bm25_topk_indexed 1.19"
-        ),
-        "round5_session3": (
-            "graph_coreness is NEW in the timed list (h-index k-core, "
-            "4 fixed iterations, ~0.96-0.97 s both phases). The other "
-            "six session additions (table_extract, warc_roundtrip, "
-            "ntriples_export, kg_snapshot_diff, robots_frontier_gate, "
-            "sitemap_extract) are oracle-harness correctness queries "
-            "over the 500-doc cap — driver-gated, not bench-timed. "
-            "Session-end loud-phase pair at HEAD: totals 140.2 / "
-            "150.6 s with non-uniform 2-3x inflation moving BETWEEN "
-            "queries across the pair (pagerank 3.5<->9.9, "
-            "canonical_components 20.1<->7.4, minhash 5.5<->0.74) — "
-            "per-query MIN across the pair matches the quiet-phase "
-            "reference above, so the code at HEAD is unregressed. "
-            "Post-corpus-change pair (head tables embedded, "
-            "graph_clustering timed): a loud run read warm 12.9 "
-            "UNIFORM across samples — still box phase, proven by an "
-            "immediate same-HEAD re-run at total 87.7 s with warm "
-            "median 2.79 (spread 2.53-3.01), graph_clustering 0.74, "
-            "graph_coreness 0.99: the session-end quiet reference"
-        ),
-        "round6": (
-            "frontier_schedule and frontier_composed join the timed "
-            "list. frontier_schedule's within-slot order is now the "
-            "two-pass global rank (r5 verdict #2) — two extra small "
-            "jobs (per-range counts + per-slot base) replace the "
-            "slot-sized window, so expect ~+0.3-0.6 s vs the r5 "
-            "number at bench scale; the plan is the one that survives "
-            "a 1e12-url frontier. graph_coreness swapped its per-node "
-            "neighbor-value sort for a count-bucket hash aggregate + "
-            "max_h-bounded window (r5 verdict #3) — value-identical, "
-            "hub-safe. jsonld_extract's harness now rotates "
-            "object/array/@graph island shapes (r5 verdict #4) and "
-            "the synthetic corpus embeds all three (bench pages cache "
-            "self-invalidates via the pages_synth fingerprint)."
-        ),
-        "round6_reference": (
-            "quiet-phase round-6 reference at HEAD (load 0.08, 62 "
-            "timed queries): total 90.06 s, kg_pipeline_warm 2.345, "
-            "graph_pagerank 3.33, canonical_components 7.73, "
-            "graph_coreness 1.25, frontier_schedule 1.69 (the "
-            "predicted +0.3-0.6 over the r5 slot-window number — the "
-            "scale-safe plan's two extra small jobs), "
-            "frontier_composed 7.82 (NEW: sitemap union + robots "
-            "gate + politeness schedule end-to-end, 5 checkpointed "
-            "stages — wall is per-stage job latency at bench scale). "
-            "Two earlier same-HEAD loud-phase samples read 118.8 and "
-            "~119 total with untouched pii_scrub at 1.7 (vs 0.89-1.2 "
-            "quiet) — box phase, per the standing disclosure."
-        ),
-        "round6_session2": (
-            "SEVEN new timed queries (hll_distinct, asof_event_state, "
-            "dsir_resample_gate, content_main_blocks, bigram_ce, "
-            "weighted_priority_sample, exact_length_quantiles). "
-            "Session-end reference at HEAD: 115.9 s over 69 queries "
-            "(mild mid-run load 2-3), per-query MIN across the 4 "
-            "session-end samples sums to 95.2 s — consistent with the "
-            "62-query 90.06 s quiet reference plus ~6 s of genuinely "
-            "new work (new-query mins: hll 3.05, asof 0.31, dsir "
-            "0.38, content 0.39, bigram 0.43, wps 0.23, quantiles "
-            "1.02). Two of the four samples were loud-phase (~259 s "
-            "totals, non-uniform 2-4x on untouched queries, the "
-            "documented pattern). hll_distinct initially cost "
-            "9.5-15 s: the AUDIT query derives the gram set twice "
-            "(sketch + exact sides; Catalyst does not reuse the "
-            "shared subtree) — now capped at 1000 docs (a no-op at "
-            "the sf0.01 oracle scale) and disclosed in the query "
-            "docstring; production runs the sketch alone."
-        ),
-    }
-
     total = round(sum(timings.values()), 3)
     result = {
         "metric": "kg_construct_bench_total",

@@ -15,6 +15,11 @@ Timing methodology matches bench.py: one untimed warmup build+action,
 then timed build+action (repeats, report all + min). `--noop` uses
 df.write.format("noop") which computes every column (guide §1.4);
 default is .count() — the action the frozen bench times.
+
+Next to each wall sample it reports the layers an A/B needs to name:
+the process tree's CPU seconds (driver, JVM less its JIT compiler
+threads, python workers; `perfbench.run.tree_usage`) and the number of
+classes Janino compiled (Spark's `CodegenMetrics`).
 """
 
 from __future__ import annotations
@@ -28,6 +33,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pdf_metadata_extraction_spark.session import default_cpus  # noqa: E402
+from perfbench.run import tree_usage  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = default_cpus()
@@ -56,6 +62,8 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     q_entries = entrymod.queries()
+    compilations = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                    .METRIC_COMPILATION_TIME())
 
     out: dict[str, dict] = {}
     for name in args.queries:
@@ -82,13 +90,21 @@ def main() -> None:
                 df.count()
 
         action()  # warmup, untimed (bench.py methodology)
-        samples = []
+        samples, cpu, compiles = [], [], []
         for _ in range(args.repeats):
+            _, cpu0, jit0 = tree_usage()
+            n0 = compilations.getCount()
             t0 = time.monotonic()
             action()
             samples.append(round(time.monotonic() - t0, 3))
-        out[name] = {"min": min(samples), "samples": samples}
-        print(f"{name}: min={min(samples)} samples={samples}", file=sys.stderr)
+            compiles.append(compilations.getCount() - n0)
+            _, cpu1, jit1 = tree_usage()
+            jit_s = sum(v - jit0.get(tid, 0.0) for tid, v in jit1.items())
+            cpu.append(round(sum(cpu1.values()) - sum(cpu0.values()) - jit_s, 3))
+        out[name] = {"min": min(samples), "samples": samples,
+                     "cpu_s": cpu, "compiles": compiles}
+        print(f"{name}: min={min(samples)} samples={samples} cpu_s={cpu} "
+              f"compiles={compiles}", file=sys.stderr)
         spark.sparkContext.setJobDescription(None)
 
     print(json.dumps(out))

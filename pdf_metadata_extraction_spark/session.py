@@ -13,6 +13,19 @@ Design notes (100 TB target):
   same N locally; on a real cluster set
   ``spark.sql.shuffle.partitions`` ~ 2-3x total cores and rely on AQE
   coalescing.
+- Generated-class cache of ``CODEGEN_CACHE_ENTRIES``. Spark's default
+  holds 100 classes in 4 LRU segments of 25, fewer than one pass of the
+  registry queries compiles, so every pass missed, recompiled with
+  Janino and ran the fresh classes in the bytecode interpreter until
+  the JIT warmed them again: the 7 ``query_mix`` queries compiled
+  88-111 classes per pass at sf0.001. With 1,000 entries a warm pass
+  compiles 0. Interleaved A/B of ``perfbench/run.py --workload
+  query_mix`` (4 cores, 10 pairs, together with the ``_t`` spread
+  made a per-query opt-in): ``op_cpu_ref_s`` 8.48 -> 6.16 s, traced
+  ``op.cpu_jvm_s`` 9.74 -> 6.67 s.
+- Shuffle scratch defaults to the OS temp dir, as does the query
+  registry's checkpoint scratch; RAM-backed storage is an opt-in
+  through ``SPARK_GRAFT_LOCAL_DIR`` (and ``SPARK_GRAFT_SCRATCH``).
 """
 
 from __future__ import annotations
@@ -24,6 +37,8 @@ import tempfile
 from pyspark.sql import SparkSession
 
 ARROW_BATCH = 10_000
+# generated classes kept compiled (``spark.sql.codegen.cache.maxEntries``)
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def python_daemon_module(master: str) -> str | None:
@@ -92,23 +107,14 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
         .config("spark.sql.session.timeZone", "UTC")
-        # round 7 (guide §2.1/§7.4 and the box's measured failure mode):
-        # shuffle blocks live under spark.local.dir; this sandbox's /tmp
-        # sits on a hypervisor-shared virtio disk whose stall phases
-        # (load-avg 10+ at ~95% idle CPU, pure iowait/steal) inflate
-        # every shuffle-bearing query 2-10x. Spill-class I/O belongs on
-        # the fastest local storage available — tmpfs here (shuffles
-        # are MBs at bench scale, box has 128 GiB); on a real cluster
-        # point SPARK_GRAFT_LOCAL_DIR at the NVMe/SSD scratch array
-        # (shuffle data at 100 TB scale exceeds RAM).
+        # shuffle blocks live under spark.local.dir: the OS temp dir
+        # unless SPARK_GRAFT_LOCAL_DIR names another (a tmpfs path on a
+        # box whose /tmp disk stalls, the NVMe/SSD scratch array on a
+        # cluster). Never RAM by default: shuffle data at scale exceeds
+        # tmpfs and competes with executor memory.
         .config(
             "spark.local.dir",
-            os.environ.get(
-                "SPARK_GRAFT_LOCAL_DIR",
-                "/dev/shm/spark_graft_local"
-                if os.path.isdir("/dev/shm")
-                else tempfile.gettempdir(),
-            ),
+            os.environ.get("SPARK_GRAFT_LOCAL_DIR") or tempfile.gettempdir(),
         )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
@@ -121,6 +127,9 @@ def get_spark(
             "spark.sql.join.preferSortMergeJoin",
             os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
         )
+        # static conf: it only takes effect at session build (see the
+        # module docstring for why and what it saved)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     daemon = python_daemon_module(master)
     if daemon:

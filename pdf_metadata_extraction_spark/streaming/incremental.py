@@ -240,6 +240,22 @@ def compact_registers(
     fs, jroot = ckpt.fs_for(spark, reg_dir)
     if not fs.exists(jroot):
         return
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    tmp = f"{reg_dir}/_compact_tmp_{upto_batch}"
+    jtmp = Path(tmp)
+    target = Path(f"{reg_dir}/batch_id={upto_batch - 1}")
+    # a run killed between deleting the target and renaming the tmp
+    # into its place left the target's registers only in the tmp (the
+    # merge of every old partition, committed: _SUCCESS is written
+    # last). Finish that commit before reading anything: a fresh merge
+    # would read around the hidden tmp and lose the target's registers.
+    if (not fs.exists(target)
+            and fs.exists(Path(f"{tmp}/_SUCCESS"))
+            and not fs.rename(jtmp, target)):
+        raise IOError(
+            f"compact_registers: resuming rename {tmp} -> {target} "
+            f"failed; batch_id={upto_batch - 1}'s registers are in {tmp}"
+        )
     olds = [
         s.getPath()
         for s in fs.listStatus(jroot)
@@ -257,26 +273,19 @@ def compact_registers(
     compacted = merged.groupBy(*keys).agg(
         F.max("register").alias("register")
     )
-    tmp = f"{reg_dir}/_compact_tmp_{upto_batch}"
     compacted.write.mode("overwrite").parquet(tmp)
-    # crash-safety (round-7 ADVICE): shrink the unsafe window to the
-    # single colliding partition. Delete ONLY batch_id=upto_batch-1
-    # (the rename target), rename tmp into place and REFUSE silently-
-    # failed renames, and only then drop the other old partitions —
-    # the merged estimate equals the originals at every intermediate
-    # state except between target-delete and rename, versus the old
-    # delete-everything-then-rename ordering (and an ignored rename
-    # result) which could silently undercount every later merge.
-    jvm = spark._jvm
-    target = jvm.org.apache.hadoop.fs.Path(
-        f"{reg_dir}/batch_id={upto_batch - 1}"
-    )
+    # Delete ONLY the rename target, rename the tmp into place (a
+    # silently failed rename raises), and only then drop the other old
+    # partitions. The merged state equals the originals at every step:
+    # between the delete and the rename the target's registers live in
+    # the committed tmp, which the resume above moves into place.
     fs.delete(target, True)
-    if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), target):
+    if not fs.rename(jtmp, target):
         raise IOError(
             f"compact_registers: rename {tmp} -> {target} failed; "
-            f"sink left uncompacted (originals intact)"
+            f"batch_id={upto_batch - 1}'s registers are in {tmp}, and "
+            f"a rerun finishes the rename"
         )
     for p in olds:
-        if p.getName() != f"batch_id={upto_batch - 1}":
+        if p.getName() != target.getName():
             fs.delete(p, True)

@@ -2,6 +2,7 @@
 broadcast choice, no shuffles in map-only stages, codegen coverage."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from pdf_metadata_extraction_spark.operators.extract import extract_text
 from pdf_metadata_extraction_spark.sources.pages_synth import generate_pages, write_pages
@@ -412,3 +413,54 @@ def test_link_options_ships_only_text_and_name_to_python(spark):
     assert sorted(a.split("#")[0].strip() for a in args.split(",")) == [
         "extraction_name", "text",
     ], line
+
+
+@pytest.fixture(scope="module")
+def mix_corpus(tmp_path_factory) -> str:
+    """The query_mix benchmark's seeded documents table (one small
+    parquet file, so it scans as a single sub-split partition)."""
+    from perfbench import inputs
+
+    return inputs.corpus(str(tmp_path_factory.mktemp("mix")), 7, 500)
+
+
+def test_query_mix_second_pass_compiles_no_classes(spark, mix_corpus):
+    """The generated-class cache holds the query_mix benchmark's whole
+    working set: a second pass over its seven registry queries reuses
+    every class the first pass compiled (Spark's default 100-entry
+    cache missed on every pass and recompiled ~100 classes). AQE is
+    off for the two passes so both plan the same classes: with it on,
+    the build side of a broadcast join can depend on which shuffle
+    stage finishes first, and each new variant compiles once."""
+    import __spark_entry__ as E
+    from perfbench.workloads import MIX
+
+    compilations = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                    .METRIC_COMPILATION_TIME())
+    fns = E.queries()
+    per_pass = []
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for _ in range(2):
+            n0 = compilations.getCount()
+            for q in MIX:
+                fns[q](spark, mix_corpus).write.format("noop").mode("overwrite").save()
+            per_pass.append(compilations.getCount() - n0)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert per_pass[0] > 0, per_pass
+    assert per_pass[1] == 0, per_pass
+
+
+def test_scan_spread_is_a_per_query_opt_in(spark, mix_corpus):
+    """A registry entry reads its sub-split table as laid out unless it
+    opts in to the round-robin spread: the map-only sample plans no
+    RoundRobinPartitioning exchange, an opt-in entry still plans one."""
+    import __spark_entry__ as E
+
+    fns = E.queries()
+    assert "RoundRobinPartitioning" not in _plan(
+        fns["hash_sample_slice"](spark, mix_corpus)
+    )
+    assert "RoundRobinPartitioning" in _plan(fns["bm25_topk"](spark, mix_corpus))

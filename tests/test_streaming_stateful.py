@@ -444,3 +444,80 @@ def test_streaming_sketch_compaction_preserves_state(spark, tmp_path):
     )
     assert merged.subtract(expect).count() == 0
     assert expect.subtract(merged).count() == 0
+
+
+class _Killed(BaseException):
+    """A process kill at a chosen call, as seen by the code under test."""
+
+
+class _KillAtRename:
+    """A Hadoop FileSystem whose ``rename`` kills the caller."""
+
+    def __init__(self, fs):
+        self._fs = fs
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+    def rename(self, src, dst):
+        raise _Killed
+
+
+def test_compaction_killed_before_rename_reruns_without_loss(
+    spark, tmp_path, monkeypatch
+):
+    """A compaction killed between deleting its target partition and
+    renaming the merged tmp into place loses nothing: the rerun
+    finishes the interrupted commit, so the merged registers still
+    equal those of every batch, and the old partitions are gone."""
+    import os
+
+    import pytest
+
+    from pdf_metadata_extraction_spark.operators import ckpt
+    from pdf_metadata_extraction_spark.operators.sketch import hll_registers
+    from pdf_metadata_extraction_spark.streaming.incremental import (
+        compact_registers,
+    )
+
+    work = str(tmp_path / "sk")
+    allrows = []
+    for b in range(4):
+        rows = [("h", f"u{b}-{i}") for i in range(50)]
+        allrows += rows
+        hll_registers(
+            spark.createDataFrame(rows, "host string, url string"),
+            ["host"], "url", p=5,
+        ).write.parquet(f"{work}/registers/batch_id={b}")
+
+    fs_for = ckpt.fs_for
+
+    def killing_fs_for(sp, path):
+        fs, jpath = fs_for(sp, path)
+        return _KillAtRename(fs), jpath
+
+    monkeypatch.setattr(ckpt, "fs_for", killing_fs_for)
+    with pytest.raises(_Killed):
+        compact_registers(spark, work, upto_batch=3)
+    monkeypatch.undo()
+    # the kill window: the target is gone, its registers only in the tmp
+    assert not os.path.exists(f"{work}/registers/batch_id=2")
+
+    compact_registers(spark, work, upto_batch=3)
+    parts = sorted(
+        d for d in os.listdir(f"{work}/registers")
+        if d.startswith("batch_id=")
+    )
+    assert parts == ["batch_id=2", "batch_id=3"], parts
+    expect = hll_registers(
+        spark.createDataFrame(allrows, "host string, url string"),
+        ["host"], "url", p=5,
+    )
+    merged = (
+        spark.read.parquet(f"{work}/registers")
+        .drop("batch_id")
+        .groupBy("host", "bucket")
+        .agg(F.max("register").alias("register"))
+    )
+    assert merged.subtract(expect).count() == 0
+    assert expect.subtract(merged).count() == 0
