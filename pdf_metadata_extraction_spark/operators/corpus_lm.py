@@ -55,12 +55,11 @@ def _doc_tf(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def _lm_from_tf(tf: DataFrame) -> DataFrame:
-    """``unigram_lm`` derived from an existing (id, word, tf) table:
-    corpus counts are Σtf per word — the same integers the explode
-    path produces, but the tf table's exchange is REUSED by Catalyst
-    when the caller also consumes ``tf`` (doc_cross_entropy,
-    dsir_weights), so the tokenizing explode over the corpus runs
-    once instead of once per LM (round 7, guide §2.3/§2.4)."""
+    """``unigram_lm`` of an (id, word, tf) table: corpus counts are Σtf
+    per word, so the tf table's exchange is REUSED by Catalyst when the
+    caller also consumes ``tf`` (doc_cross_entropy, dsir_weights), and
+    the tokenizing explode over the corpus runs once instead of once
+    per LM (round 7, guide §2.3/§2.4)."""
     counts = tf.groupBy("word").agg(F.sum("tf").cast("long").alias("c"))
     total = counts.agg(F.sum("c").cast("long").alias("_total"))
     return counts.crossJoin(F.broadcast(total)).select(
@@ -81,21 +80,7 @@ def unigram_lm(
     micro-nat surprisal ``round(round6(ln(total / c)) * 1e6)`` of each
     word.  ``total`` is injected via a broadcast one-row cross join so
     the count aggregation stays a single map-side-combined groupBy."""
-    counts = (
-        df.select(F.explode(F.expr(_TOKENS.format(t=text_col))).alias("word"))
-        .groupBy("word")
-        .agg(F.count("*").cast("long").alias("c"))
-    )
-    total = counts.agg(F.sum("c").cast("long").alias("_total"))
-    return counts.crossJoin(F.broadcast(total)).select(
-        "word",
-        "c",
-        F.round(
-            F.round(F.log(F.col("_total") / F.col("c")), 6) * 1000000.0, 0
-        )
-        .cast("long")
-        .alias("cost_micro"),
-    )
+    return _lm_from_tf(_doc_tf(df, id_col, text_col))
 
 
 def doc_cross_entropy(
@@ -123,10 +108,15 @@ def doc_cross_entropy(
             ),
         )
     )
-    # left join back so token-free docs still get a (zeroed) row
+    # left join back so token-free docs still get a (zeroed) row. The
+    # key match is null-safe, so Catalyst infers no isnotnull(id) on
+    # per_doc: pushed below the tf exchange, that filter would stop it
+    # matching the tf exchange under the LM, and the corpus would be
+    # exploded twice.  A null id still matches nothing.
     base = df.select(F.col(id_col).alias("id")).distinct()
-    return base.join(per_doc, "id", "left").select(
-        F.col("id").alias(id_col),
+    on = base["id"].eqNullSafe(per_doc["id"]) & base["id"].isNotNull()
+    return base.join(per_doc, on, "left").select(
+        base["id"].alias(id_col),
         F.coalesce("n_tokens", F.lit(0)).cast("long").alias("n_tokens"),
         F.coalesce("ce_total_micro", F.lit(0)).cast("long").alias("ce_total_micro"),
         F.when(

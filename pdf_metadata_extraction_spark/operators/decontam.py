@@ -159,13 +159,12 @@ def scrub_contaminated_spans(
 
 def contamination(
     corpus: DataFrame,
-    eval_df: DataFrame | None,
+    eval_df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 7,
     threshold_num: int = 1,
     threshold_den: int = 5,
-    eval_grams: DataFrame | None = None,
 ) -> DataFrame:
     """Per-document contamination report of ``corpus`` against
     ``eval_df``.
@@ -179,19 +178,12 @@ def contamination(
 
     Every corpus doc gets a row (docs shorter than ``n`` words report
     zeros) so the output is a drop-in keep/drop gate column source.
-
-    ``eval_grams``: a precomputed (and ideally persisted)
-    ``eval_ngram_set`` output — pass it when judging many batches
-    against one eval suite (the streaming gate) so the set is not
-    re-derived per call; ``eval_df`` is ignored when given.
     """
     grams = (
         _tokens(corpus, id_col, text_col)
         .select("id", F.explode_outer(word_ngram_col("_w", n)).alias("gram"))
     )
-    if eval_grams is None:
-        eval_grams = eval_ngram_set(eval_df, id_col, text_col, n)
-    ev = F.broadcast(eval_grams)
+    ev = F.broadcast(eval_ngram_set(eval_df, id_col, text_col, n))
     hit = (
         grams.join(ev.withColumn("_hit", F.lit(1)), "gram", "left")
         .groupBy("id")

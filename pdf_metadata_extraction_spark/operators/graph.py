@@ -913,19 +913,6 @@ def coreness(
     return vals.select("node", F.col("val").alias("coreness"))
 
 
-def k_core(edges: DataFrame, k: int, iters: int = 8) -> DataFrame:
-    """The k-core membership table — (node,) for nodes whose coreness
-    (as computed by ``coreness(edges, iters)``) is ≥ k. Exact once the
-    h-index iteration has converged (coreness ≥ k ⟺ the node survives
-    iterated degree-< k peeling); the standard "dense nucleus" gate on
-    a canonicalized KG — a canonical id whose merged entity falls out
-    of every k-core it used to inhabit was probably over-merged from
-    pendant noise."""
-    return coreness(edges, iters=iters).where(
-        F.col("coreness") >= F.lit(k)
-    ).select("node")
-
-
 def k_hop_reachable(
     edges: DataFrame, sources: DataFrame, k: int,
     top_k: int | None = None,

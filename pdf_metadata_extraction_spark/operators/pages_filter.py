@@ -6,15 +6,11 @@ where labels appear, widened by a margin; prediction reuses the page
 statistics learned at training) — call sites
 /root/reference/src/use_cases/SampleProcessorUseCase.py:28,50-51.
 
-Spark recast: prune *before* the expensive parse.
-- training: label pages come from ``label_segments_boxes.page_number``;
-  keep those pages ±``margin`` → a tiny (url, page) predicate.
-- prediction: the training-side aggregate (min/max label page over the
-  extraction, widened) becomes a broadcast predicate on token pages —
-  partition/row-group pruning when tokens are stored page-partitioned.
-
-Everything is small-side aggregation + broadcast semi-join; the point is
-the *placement*: this runs against token/page metadata before parse.
+Spark recast: prune *before* the expensive parse. Training reduces the
+labels to one aggregate — the (min, max) label page over the
+extraction, widened ±``margin`` — and prediction applies it as a page
+window inside ``plans.pipeline.segments_from_pages(page_range=...)``,
+so out-of-window tokens never reach the segmenter.
 """
 
 from __future__ import annotations
@@ -23,24 +19,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_MARGIN = 1
-
-
-def label_pages(labels: DataFrame, margin: int = DEFAULT_MARGIN) -> DataFrame:
-    """(url, page) pairs to keep for training docs: every page touched by
-    a label box, widened ±margin."""
-    pages = labels.select(
-        "url", F.explode("label_segments_boxes").alias("b")
-    ).select("url", F.col("b.page_number").alias("page"))
-    widened = pages.select(
-        "url",
-        F.explode(
-            F.sequence(
-                F.greatest(F.col("page") - margin, F.lit(1)),
-                F.col("page") + margin,
-            )
-        ).alias("page"),
-    )
-    return widened.distinct()
 
 
 def page_range_stats(labels: DataFrame, margin: int = DEFAULT_MARGIN) -> tuple[int, int] | None:
@@ -56,21 +34,3 @@ def page_range_stats(labels: DataFrame, margin: int = DEFAULT_MARGIN) -> tuple[i
     if row["lo"] is None:
         return None
     return max(1, int(row["lo"]) - margin), int(row["hi"]) + margin
-
-
-def filter_tokens_for_training(
-    tokens: DataFrame, labels: DataFrame, margin: int = DEFAULT_MARGIN
-) -> DataFrame:
-    """Broadcast semi-join on the per-doc valid page list."""
-    keep = label_pages(labels, margin)
-    return tokens.join(F.broadcast(keep), ["url", "page"], "left_semi")
-
-
-def filter_tokens_for_prediction(
-    tokens: DataFrame, stats: tuple[int, int] | None
-) -> DataFrame:
-    """Range predicate learned at training — pushes to the scan."""
-    if stats is None:
-        return tokens
-    lo, hi = stats
-    return tokens.where((F.col("page") >= lo) & (F.col("page") <= hi))

@@ -62,78 +62,3 @@ def read_table(spark: SparkSession, name: str, path: str) -> DataFrame:
     if has_iceberg(spark):
         return spark.read.table(f"kg.{name}")
     return spark.read.parquet(path)
-
-
-def upsert_table(
-    df: DataFrame,
-    name: str,
-    path: str,
-    key_cols: list[str],
-    partition_col: str,
-) -> None:
-    """MERGE-by-key into a ``partition_col``-partitioned table — the
-    Iceberg ``MERGE INTO ... WHEN MATCHED THEN UPDATE WHEN NOT MATCHED
-    THEN INSERT`` semantics, expressed so the parquet stand-in touches
-    ONLY the partitions the incoming rows live in (Iceberg's own MERGE
-    rewrites only affected data files; rewriting the whole table per
-    increment would be the 10^12-row anti-pattern).
-
-    Parquet path mechanics: dynamic partition overwrite
-    (``partitionOverwriteMode=dynamic``) replaces exactly the
-    partitions present in the written frame; the written frame =
-    incoming rows UNION the existing rows of THOSE partitions whose
-    keys are not being replaced (one partition-pruned read + one
-    key anti-join). Unaffected partitions are never read or written.
-    Incoming rows must carry ``partition_col``; new-key rows insert,
-    matching-key rows replace. With an Iceberg catalog the real MERGE
-    runs instead.
-    """
-    from pdf_metadata_extraction_spark.operators import ckpt
-
-    spark = df.sparkSession
-    if has_iceberg(spark):
-        df.createOrReplaceTempView("_upsert_src")
-        on = " AND ".join(f"t.{k} = s.{k}" for k in key_cols)
-        spark.sql(
-            f"MERGE INTO kg.{name} t USING _upsert_src s ON {on} "
-            "WHEN MATCHED THEN UPDATE SET * "
-            "WHEN NOT MATCHED THEN INSERT *"
-        )
-        return
-    if not ckpt.fs_exists(spark, f"{path.rstrip('/')}/_SUCCESS") and not any(
-        True for _ in _partition_dirs(spark, path, partition_col)
-    ):
-        # first write: plain partitioned write
-        df.repartition(F.col(partition_col)).write.mode(
-            "overwrite"
-        ).partitionBy(partition_col).parquet(path)
-        return
-    existing = spark.read.option("basePath", path).parquet(path)
-    # partition pruning: only the partitions the increment touches
-    touched = [
-        r[partition_col]
-        for r in df.select(partition_col).distinct().collect()
-    ]
-    kept = existing.where(F.col(partition_col).isin(touched)).join(
-        df.select(*key_cols).distinct(), key_cols, "left_anti"
-    )
-    out = kept.select(*df.columns).unionByName(df)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        out.repartition(F.col(partition_col)).write.mode(
-            "overwrite"
-        ).partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-
-
-def _partition_dirs(spark: SparkSession, path: str, partition_col: str):
-    from pdf_metadata_extraction_spark.operators import ckpt
-
-    fs, jp = ckpt.fs_for(spark, path)
-    if not fs.exists(jp):
-        return
-    for st in fs.listStatus(jp):
-        n = st.getPath().getName()
-        if n.startswith(f"{partition_col}="):
-            yield n

@@ -1,152 +1,22 @@
-"""Streaming incremental dedup against a DURABLE corpus hash table —
-the continuous-ingest face of ``operators/dedup.incremental_exact``.
+"""Streaming incremental cardinality against DURABLE sketch state.
 
-``streaming/dedup.dedup_stream`` bounds its state by the watermark
-horizon, so duplicates farther apart than the horizon pass through and
-are left to the batch layer. This module closes that gap for the
-pipeline that wants exact ingest-time dedup against EVERYTHING ever
-accepted: each micro-batch classifies its rows against the persisted
-hash table (corpus_dup / batch_dup / novel, min-id survivor) and
-appends ONLY its novel hashes as a new hash-table partition — state
-lives in parquet (Iceberg in production), not the streaming state
-store, so it survives restarts, is unbounded by watermarks, and never
-rewrites old state (append-only parts; at 10^12 accepted pages the
-per-batch write is O(novel), the read is a partition-pruned scan of
-the hash column only).
+Each micro-batch appends its HLL registers as a parquet partition
+(Iceberg in production) instead of keeping them in the streaming state
+store, so the state survives restarts, is unbounded by watermarks, and
+old state is never rewritten except by the explicit compaction below.
 
 Failure/replay contract: Structured Streaming may re-run a micro-batch
-after a crash. Both writes are keyed by ``batch_id`` (hive-style
-``batch_id=N`` directories, overwritten whole on re-run), and the
-corpus read EXCLUDES partitions ≥ the current batch_id — a replayed
-batch therefore classifies against exactly the state its first attempt
-saw and overwrites its own outputs: idempotent, no double-counted
-hashes, no self-contamination.
+after a crash. Every write is keyed by ``batch_id`` (hive-style
+``batch_id=N`` directories, overwritten whole on re-run), and the merge
+read covers exactly the partitions the first attempt saw — a replayed
+batch overwrites its own outputs: idempotent, no double-counted
+registers.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def run_incremental_dedup(
-    pages_stream: DataFrame,
-    work_dir: str,
-    id_col: str = "url",
-    text_col: str = "text",
-    available_now: bool = True,
-):
-    """Start the incremental-dedup sink over a streaming pages frame.
-
-    Layout under ``work_dir``:
-    - ``classified/batch_id=N/`` — (id, text_hash, status) per batch;
-    - ``hashes/batch_id=N/``     — that batch's NOVEL hashes (the
-      append-only corpus hash table; the union of all partitions IS
-      the corpus state);
-    - ``ck/``                    — the stream checkpoint.
-
-    Returns the started StreamingQuery.
-    """
-    from pdf_metadata_extraction_spark.operators import ckpt
-    from pdf_metadata_extraction_spark.operators.dedup import (
-        incremental_exact,
-    )
-
-    root = work_dir.rstrip("/")
-    hash_dir = f"{root}/hashes"
-    out_dir = f"{root}/classified"
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        fs, jroot = ckpt.fs_for(sp, hash_dir)
-        has_state = fs.exists(jroot) and len(fs.listStatus(jroot)) > 0
-        if has_state:
-            corpus = (
-                sp.read.parquet(hash_dir)
-                .where(F.col("batch_id") < batch_id)
-                .select("text_hash")
-            )
-        else:
-            corpus = sp.createDataFrame([], "text_hash string")
-        classified, _ = incremental_exact(
-            batch_df, corpus, id_col=id_col, text_col=text_col
-        )
-        classified.write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}"
-        )
-        classified.sparkSession.read.parquet(
-            f"{out_dir}/batch_id={batch_id}"
-        ).where(F.col("status") == "novel").select("text_hash").write.mode(
-            "overwrite"
-        ).parquet(f"{hash_dir}/batch_id={batch_id}")
-
-    writer = (
-        pages_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", f"{root}/ck")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def run_decontam_gate(
-    pages_stream: DataFrame,
-    eval_df: DataFrame,
-    work_dir: str,
-    id_col: str = "url",
-    text_col: str = "text",
-    n: int = 7,
-    threshold_num: int = 1,
-    threshold_den: int = 2,
-    available_now: bool = True,
-):
-    """Streaming benchmark-decontamination gate: every micro-batch is
-    judged against a STATIC eval suite and split into ``kept/`` and
-    ``dropped/`` parquet sinks (dropped rows carry their contam_frac
-    for audit).
-
-    The eval n-gram set is derived ONCE at start and persisted — each
-    batch pays only the broadcast join (operators/decontam: eval side
-    broadcast, batch side map-only), not the gram derivation. Both
-    sinks are ``batch_id``-keyed hive partitions overwritten whole on
-    replay — the same idempotent re-run contract as the incremental
-    dedup sink above.
-
-    Layout: ``{work_dir}/kept/batch_id=N/`` (id, text),
-    ``{work_dir}/dropped/batch_id=N/`` (id, contam_frac).
-    """
-    from pdf_metadata_extraction_spark.operators.decontam import (
-        contamination,
-        eval_ngram_set,
-    )
-
-    root = work_dir.rstrip("/")
-    ev = eval_ngram_set(eval_df, id_col, text_col, n).persist()
-    ev.count()  # eager: fill the cache before the first batch races it
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        rep = contamination(
-            batch_df, None, id_col=id_col, text_col=text_col, n=n,
-            threshold_num=threshold_num, threshold_den=threshold_den,
-            eval_grams=ev,
-        ).select(id_col, "contam_frac", "contaminated")
-        judged = batch_df.select(id_col, text_col).join(rep, id_col)
-        judged.where(F.col("contaminated") == 0).select(
-            id_col, text_col
-        ).write.mode("overwrite").parquet(f"{root}/kept/batch_id={batch_id}")
-        judged.where(F.col("contaminated") == 1).select(
-            id_col, "contam_frac"
-        ).write.mode("overwrite").parquet(
-            f"{root}/dropped/batch_id={batch_id}"
-        )
-
-    writer = (
-        pages_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", f"{root}/ck")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_distinct_sketch(
@@ -227,10 +97,10 @@ def compact_registers(
     and with replay (a replayed batch N >= upto_batch still reads
     exactly the state its first attempt saw — now in fewer files).
 
-    This is the maintenance job the module docstring promises: rows
-    were always bounded; this bounds the DIRECTORY count too. Write is
-    tmp-then-rename via the Hadoop FileSystem API (works on file:/
-    hdfs:/ s3a: alike, same as the CC checkpoint sidecars).
+    This is the maintenance job run_distinct_sketch's long-run note
+    names: rows were always bounded; this bounds the DIRECTORY count
+    too. Write is tmp-then-rename via the Hadoop FileSystem API (works
+    on file:/ hdfs:/ s3a: alike, same as the CC checkpoint sidecars).
     """
     from pyspark.sql import functions as F
 

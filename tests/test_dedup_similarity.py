@@ -1,5 +1,5 @@
 """Tests for the scale-path operators: dedup suite, canonicalization,
-similarity search, text stats, multimodal plumbing, watermark consume."""
+similarity search, text stats, watermark consume."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -128,24 +128,6 @@ def test_textstats(spark, docs):
     fp = {r["id"]: r for r in textstats.fingerprint(docs, "doc_id").collect()}
     assert fp[1]["fp_md5"] == fp[2]["fp_md5"]
     assert fp[1]["fp_int"] == fp[2]["fp_int"] and fp[1]["fp_int"] != fp[4]["fp_int"]
-
-
-def test_multimodal_plumbing(spark):
-    from pdf_metadata_extraction_spark.operators import multimodal as mm
-    media = mm.synth_media(spark, 12)
-    feats = mm.extract_media_features(media, deterministic_fake=True)
-    rows = feats.collect()
-    assert len(rows) == 12
-    assert all(len(r["features"]) == mm.FEATURE_DIM for r in rows)
-    # determinism: same bytes → same features
-    again = {r["media_id"]: r["features"] for r in
-             mm.extract_media_features(media, deterministic_fake=True).collect()}
-    assert all(again[r["media_id"]] == r["features"] for r in rows)
-    # real decode path is explicitly stubbed
-    with pytest.raises(Exception):
-        mm.extract_media_features(media).collect()
-    plan = mm.frame_sample_plan(media, every_ms=500)
-    assert plan.where("media_id = 'm000002'").count() > 0
 
 
 def test_watermark_consume_once(spark, tmp_path):
@@ -364,47 +346,6 @@ def test_lang_id_ngram_beats_marker_heuristic_on_short_texts(spark):
     assert marker_correct <= 5  # the gap the n-gram model closes
 
 
-def test_multimodal_real_bmp_ppm_decode(spark):
-    """Round-2 verdict #8: one honest non-stub decode path. A 4x4 BMP
-    encodes -> decodes byte-identically, PPM (with comment) too, and the
-    real decoder flows through the Spark Arrow stage end-to-end."""
-    import numpy as np
-
-    from pdf_metadata_extraction_spark.operators import multimodal as mm
-
-    img = np.arange(4 * 4 * 3, dtype=np.uint8).reshape(4, 4, 3) * 5
-    assert np.array_equal(mm.decode_bmp(mm.encode_bmp(img)), img)
-    # odd width exercises row padding
-    img2 = img[:, :3, :]
-    assert np.array_equal(mm.decode_bmp(mm.encode_bmp(img2)), img2)
-
-    ppm = b"P6\n# a comment\n4 4\n255\n" + img.tobytes()
-    assert np.array_equal(mm.decode_ppm(ppm), img)
-
-    media = spark.createDataFrame(
-        [("b1", None, "image", bytearray(mm.encode_bmp(img)), 4, 4, None),
-         ("p1", None, "image", bytearray(ppm), 4, 4, None)],
-        mm.MEDIA_SCHEMA,
-    )
-    feats = {r["media_id"]: r for r in
-             mm.extract_media_features(media).collect()}  # REAL decode
-    for mid in ("b1", "p1"):
-        f = feats[mid]["features"]
-        assert len(f) == mm.FEATURE_DIM
-        assert f[0] == 4.0 and f[1] == 4.0          # height, width
-        px = img.reshape(-1, 3).mean(axis=0)
-        assert abs(f[2] - px[0]) < 0.01             # mean R matches pixels
-    # non-decodable codec without the fake flag still fails loudly
-    import pytest
-
-    junk = spark.createDataFrame(
-        [("j1", None, "image", bytearray(b"\x89PNG...."), 1, 1, None)],
-        mm.MEDIA_SCHEMA,
-    )
-    with pytest.raises(Exception, match="NotImplementedError|decoder"):
-        mm.extract_media_features(junk).collect()
-
-
 def test_incremental_lsh_membership(spark):
     """Batch-vs-corpus near-dup candidates: a perturbed copy probes
     the PERSISTED corpus band table and finds its original; a disjoint
@@ -506,169 +447,6 @@ def test_hash_sample_and_stratified_cap(spark):
     assert pick1 == pick2
 
 
-def test_multimodal_real_png_wav_decode(spark):
-    """Round-5: PNG (stdlib zlib) and PCM WAVE (stdlib wave) decode
-    natively — encode->decode roundtrips pixel/sample-exact, every PNG
-    scanline filter un-filters correctly, gray/alpha variants expand
-    per contract, and both flow through the real Arrow stage."""
-    import struct
-    import zlib
-
-    import numpy as np
-    import pytest
-
-    from pdf_metadata_extraction_spark.operators import multimodal as mm
-
-    rng = np.random.RandomState(11)
-    img = rng.randint(0, 256, size=(5, 4, 3), dtype=np.uint8)
-    assert np.array_equal(mm.decode_png(mm.encode_png(img)), img)
-
-    # every RFC 2083 filter type: forward-filter a known image by hand,
-    # decode must recover it exactly
-    def forward_filter(px, ftype):
-        h, w, ch = px.shape
-        stride = w * ch
-        flat = px.reshape(h, stride).astype(np.int32)
-        out = b""
-        prev = np.zeros(stride, np.int32)
-        for y in range(h):
-            cur = flat[y]
-            enc = np.zeros(stride, np.int32)
-            for i in range(stride):
-                a = cur[i - ch] if i >= ch else 0
-                b = prev[i]  # zeros row above the first (spec)
-                c = prev[i - ch] if i >= ch else 0
-                if ftype == 0:
-                    pred = 0
-                elif ftype == 1:
-                    pred = a
-                elif ftype == 2:
-                    pred = b
-                elif ftype == 3:
-                    pred = (a + b) // 2
-                else:
-                    pa, pb, pc = abs(b - c), abs(a - c), abs(a + b - 2 * c)
-                    pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                enc[i] = (cur[i] - pred) % 256
-            out += bytes([ftype]) + enc.astype(np.uint8).tobytes()
-            prev = cur
-        return out
-
-    def png_from_raw(raw, w, h, color, ch):
-        def chunk(ctype, payload):
-            crc = zlib.crc32(ctype + payload) & 0xFFFFFFFF
-            return (struct.pack(">I", len(payload)) + ctype + payload
-                    + struct.pack(">I", crc))
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
-        return (mm.PNG_SIG + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b""))
-
-    for ftype in range(5):
-        raw = forward_filter(img, ftype)
-        assert np.array_equal(
-            mm.decode_png(png_from_raw(raw, 4, 5, 2, 3)), img
-        ), f"filter {ftype}"
-
-    # gray expands to RGB; RGBA drops alpha
-    gray = rng.randint(0, 256, size=(3, 3, 1), dtype=np.uint8)
-    g = mm.decode_png(png_from_raw(forward_filter(gray, 0), 3, 3, 0, 1))
-    assert np.array_equal(g, np.repeat(gray, 3, axis=2))
-    rgba = rng.randint(0, 256, size=(3, 3, 4), dtype=np.uint8)
-    a = mm.decode_png(png_from_raw(forward_filter(rgba, 2), 3, 3, 6, 4))
-    assert np.array_equal(a, rgba[..., :3])
-
-    # WAV: synth sine roundtrips, features are sane
-    t = np.arange(8000) / 8000.0
-    sine = 0.5 * np.sin(2 * np.pi * 440 * t)
-    samples, rate = mm.decode_wav(mm.encode_wav(sine, 8000))
-    assert rate == 8000 and len(samples) == 8000
-    assert np.abs(samples - sine).max() < 1e-3  # 16-bit quantization
-    feats = mm._audio_features(samples, rate)
-    assert len(feats) == mm.FEATURE_DIM
-    assert abs(feats[0] - 1000.0) < 1e-3          # duration_ms
-    assert abs(feats[2] - 0.5 / np.sqrt(2)) < 1e-2  # rms of a sine
-
-    # both flow through the REAL Arrow decode stage
-    media = spark.createDataFrame(
-        [("png1", None, "image", bytearray(mm.encode_png(img)), 4, 5, None),
-         ("wav1", None, "audio", bytearray(mm.encode_wav(sine, 8000)),
-          None, None, 1000)],
-        mm.MEDIA_SCHEMA,
-    )
-    got = {r["media_id"]: r["features"] for r in
-           mm.extract_media_features(media).collect()}
-    assert got["png1"][0] == 5.0 and got["png1"][1] == 4.0  # height, width
-    assert abs(got["wav1"][0] - 1000.0) < 1e-3
-
-    # palette PNGs decode via PLTE lookup (r6: the documented r5 gap)
-    def png_palette(idx_img, plte_rgb):
-        def chunk(ctype, payload):
-            crc = zlib.crc32(ctype + payload) & 0xFFFFFFFF
-            return (struct.pack(">I", len(payload)) + ctype + payload
-                    + struct.pack(">I", crc))
-        h2, w2 = idx_img.shape
-        raw = b"".join(
-            b"\x00" + idx_img[y].astype(np.uint8).tobytes()
-            for y in range(h2)
-        )
-        ihdr = struct.pack(">IIBBBBB", w2, h2, 8, 3, 0, 0, 0)
-        return (mm.PNG_SIG + chunk(b"IHDR", ihdr)
-                + chunk(b"PLTE", plte_rgb.astype(np.uint8).tobytes())
-                + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b""))
-
-    plte = np.array([[255, 0, 0], [0, 255, 0], [0, 0, 128]], np.uint8)
-    idx = np.array([[0, 1], [2, 0]], np.uint8)
-    got_pal = mm.decode_png(png_palette(idx, plte))
-    assert np.array_equal(got_pal, plte[idx])
-    # missing PLTE / out-of-range index fail loudly, not silently
-    no_plte = png_from_raw(b"\x00\x00", 1, 1, 3, 1)
-    with pytest.raises(ValueError):
-        mm.decode_png(no_plte)
-    with pytest.raises(ValueError):
-        mm.decode_png(png_palette(np.array([[7]], np.uint8), plte))
-    with pytest.raises(ValueError):
-        mm.decode_wav(b"RIFFxxxxWAVEjunk")
-
-
-def test_image_dims_header_probe(spark):
-    """Header-only dims for PNG/GIF/JPEG/BMP — no pixel decode; the
-    resolution-audit primitive a multimodal pipeline runs before
-    spending decode. Unknown blobs yield NULLs, never errors."""
-    import struct
-
-    import numpy as np
-
-    from pdf_metadata_extraction_spark.operators import multimodal as mm
-
-    rng = np.random.RandomState(3)
-    png = mm.encode_png(rng.randint(0, 256, size=(7, 9, 3), dtype=np.uint8))
-    bmp = mm.encode_bmp(rng.randint(0, 256, size=(5, 6, 3), dtype=np.uint8))
-    gif = b"GIF89a" + struct.pack("<HH", 320, 200) + b"\x00" * 5
-    # minimal JPEG: SOI, APP0 stub, SOF0 with dims, EOI
-    jpeg = (
-        b"\xff\xd8"
-        + b"\xff\xe0" + struct.pack(">H", 4) + b"JF"
-        + b"\xff\xc0" + struct.pack(">H", 11)
-        + b"\x08" + struct.pack(">HH", 480, 640) + b"\x03\x00\x00\x00"
-        + b"\xff\xd9"
-    )
-    media = spark.createDataFrame(
-        [(1, bytearray(png)), (2, bytearray(bmp)), (3, bytearray(gif)),
-         (4, bytearray(jpeg)), (5, bytearray(b"not an image")), (6, None)],
-        "media_id long, content binary",
-    )
-    got = {
-        r.media_id: (r.format, r.width, r.height)
-        for r in mm.image_dims(media).collect()
-    }
-    assert got[1] == ("png", 9, 7)
-    assert got[2] == ("bmp", 6, 5)
-    assert got[3] == ("gif", 320, 200)
-    assert got[4] == ("jpeg", 640, 480)
-    assert got[5] == (None, None, None)
-    assert got[6] == (None, None, None)
-
-
 def test_winnow_fingerprints_detect_partial_copy(spark):
     """Winnowing guarantee (Schleimer et al.): docs sharing a substring
     of length >= w+k-1 (= 11 at the defaults) share >= 1 fingerprint;
@@ -691,23 +469,6 @@ def test_winnow_fingerprints_detect_partial_copy(spark):
     # whole-doc fingerprints CANNOT see the partial copy (distinct texts)
     whole = {r["fp_md5"] for r in textstats.fingerprint(df, "doc_id").collect()}
     assert len(whole) == 3
-
-
-def test_decode_ppm_truncated_inputs_fail_loudly():
-    """Regression (round-3 self-review): a truncated PPM header/body must
-    raise, never spin — one malformed blob must not hang an executor."""
-    import numpy as np
-    import pytest
-
-    from pdf_metadata_extraction_spark.operators import multimodal as mm
-
-    for bad in (b"P6 2 2", b"P6", b"P6 4 4 255", b"P6\n# only a comment",
-                b"P6 2 2 255 \x00\x00"):
-        with pytest.raises((ValueError, NotImplementedError)):
-            mm.decode_ppm(bad)
-    img = np.zeros((2, 2, 3), dtype=np.uint8)
-    good = b"P6 2 2 255\n" + img.tobytes()
-    assert mm.decode_ppm(good).shape == (2, 2, 3)
 
 
 def test_bm25_ranking_semantics(spark):

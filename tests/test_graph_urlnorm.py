@@ -1102,7 +1102,7 @@ def test_hits_top_k_serving_releases_storage(spark):
 
 
 def test_coreness_known_graphs(spark):
-    from pdf_metadata_extraction_spark.operators.graph import coreness, k_core
+    from pdf_metadata_extraction_spark.operators.graph import coreness
 
     # K5 clique (coreness 4) — chain 4-5-6-7 (1) — triangle 8-9-10 (2)
     pairs = [(a, b) for a in range(5) for b in range(a + 1, 5)]
@@ -1113,13 +1113,6 @@ def test_coreness_known_graphs(spark):
     # fixed point: one extra iteration changes nothing
     got7 = {r.node: r.coreness for r in coreness(_edges(spark, pairs), 7).collect()}
     assert got7 == exp
-    # k-core membership = coreness >= k once converged
-    assert sorted(
-        r.node for r in k_core(_edges(spark, pairs), 3).collect()
-    ) == [0, 1, 2, 3, 4]
-    assert sorted(
-        r.node for r in k_core(_edges(spark, pairs), 2).collect()
-    ) == [0, 1, 2, 3, 4, 8, 9, 10]
 
 
 def test_coreness_dups_loops_direction_and_empty(spark):

@@ -5,14 +5,8 @@ import os
 import time
 
 import pytest
-from pyspark.sql import functions as F
 
-from pdf_metadata_extraction_spark.operators.pages_filter import (
-    filter_tokens_for_prediction,
-    filter_tokens_for_training,
-    label_pages,
-    page_range_stats,
-)
+from pdf_metadata_extraction_spark.operators.pages_filter import page_range_stats
 from pdf_metadata_extraction_spark.schemas import LABELS
 
 
@@ -31,32 +25,13 @@ def _label(spark, url, pages):
     )
 
 
-def test_valid_pages_filter_training(spark):
-    labels = _label(spark, "u1", [5])
-    keep = {(r["url"], r["page"]) for r in label_pages(labels).collect()}
-    assert keep == {("u1", 4), ("u1", 5), ("u1", 6)}
-    tokens = spark.createDataFrame(
-        [("u1", p, 0, "t", 0.0, 0.0, 1.0, 1.0, "f", 1.0, False) for p in range(1, 11)],
-        "url string, page int, token_idx int, text string, left double, top double,"
-        "width double, height double, font_id string, font_size double, bold boolean",
-    )
-    kept = filter_tokens_for_training(tokens, labels)
-    assert sorted(r["page"] for r in kept.collect()) == [4, 5, 6]
-
-
 def test_valid_pages_filter_prediction(spark):
     labels = _label(spark, "u1", [3, 7])
     stats = page_range_stats(labels)
     assert stats == (2, 8)
-    tokens = spark.createDataFrame(
-        [("u1", p) for p in range(1, 11)], "url string, page int"
-    )
-    kept = filter_tokens_for_prediction(tokens, stats)
-    assert sorted(r["page"] for r in kept.collect()) == list(range(2, 9))
     # no boxes → no filter (degenerate ok)
     empty = _label(spark, "u2", [])
     assert page_range_stats(empty) is None
-    assert filter_tokens_for_prediction(tokens, None).count() == 10
 
 
 def test_model_store_roundtrip_and_ttl(tmp_path):
@@ -194,52 +169,6 @@ def test_fuzzy_dictionary_matching():
 
     # fuzzy off → old behavior
     assert match_options("the spark engine", [("1", "Spark")], True, fuzzy=False) == []
-
-
-def test_upsert_table_merge_semantics_partition_scoped(spark, tmp_path):
-    """MERGE-by-key stand-in (Iceberg MERGE INTO semantics on the
-    parquet layout): matching keys replace, new keys insert, and —
-    the scale property — partitions the increment does not touch are
-    neither read-modified nor rewritten (their files' mtimes are
-    byte-for-byte untouched)."""
-    import os
-    import time
-
-    from pdf_metadata_extraction_spark.sources.io import upsert_table
-
-    path = str(tmp_path / "edges")
-    base = spark.createDataFrame(
-        [("k1", 0, "v1"), ("k2", 0, "v2"), ("k3", 1, "v3")],
-        "key string, bucket int, val string",
-    )
-    upsert_table(base, "edges", path, ["key"], "bucket")
-    b1_files = {
-        f: os.path.getmtime(os.path.join(path, "bucket=1", f))
-        for f in os.listdir(os.path.join(path, "bucket=1"))
-        if f.endswith(".parquet")
-    }
-    time.sleep(1.1)  # mtime resolution guard
-
-    inc = spark.createDataFrame(
-        [("k2", 0, "v2_new"),   # matched -> update
-         ("k9", 0, "v9"),       # not matched -> insert (existing part)
-         ("k5", 2, "v5")],      # not matched -> insert (NEW partition)
-        "key string, bucket int, val string",
-    )
-    upsert_table(inc, "edges", path, ["key"], "bucket")
-    got = {r["key"]: (r["bucket"], r["val"])
-           for r in spark.read.parquet(path).collect()}
-    assert got == {
-        "k1": (0, "v1"), "k2": (0, "v2_new"), "k3": (1, "v3"),
-        "k9": (0, "v9"), "k5": (2, "v5"),
-    }
-    # bucket=1 was untouched by the increment: same files, same mtimes
-    b1_after = {
-        f: os.path.getmtime(os.path.join(path, "bucket=1", f))
-        for f in os.listdir(os.path.join(path, "bucket=1"))
-        if f.endswith(".parquet")
-    }
-    assert b1_after == b1_files
 
 
 def test_write_table_iceberg_branch_routing(spark, monkeypatch):

@@ -464,3 +464,24 @@ def test_scan_spread_is_a_per_query_opt_in(spark, mix_corpus):
         fns["hash_sample_slice"](spark, mix_corpus)
     )
     assert "RoundRobinPartitioning" in _plan(fns["bm25_topk"](spark, mix_corpus))
+
+
+def test_doc_cross_entropy_tokenizes_once(spark):
+    """The unigram LM is derived from the per-document tf table, so the
+    tf exchange is shared and the corpus is exploded once: the join
+    back onto the id base must not push an isnotnull(id) filter into
+    one tf branch only, which would leave a second Generate in the
+    final plan."""
+    from pdf_metadata_extraction_spark.operators.corpus_lm import (
+        doc_cross_entropy,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "spark spark window"), (2, "merge window"), (3, ""),
+         (None, "spark hash"), (4, None)],
+        "doc_id int, text string",
+    )
+    ce = doc_cross_entropy(docs)
+    ce.collect()
+    final = ce._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert final.count("Generate") == 1, final
