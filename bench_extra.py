@@ -18,8 +18,9 @@ default is .count() — the action the frozen bench times.
 
 Next to each wall sample it reports the layers an A/B needs to name:
 the process tree's CPU seconds (driver, JVM less its JIT compiler
-threads, python workers; `perfbench.run.tree_usage`) and the number of
-classes Janino compiled (Spark's `CodegenMetrics`).
+threads, python workers; `perfbench.run.tree_usage`), the number of
+classes Janino compiled (Spark's `CodegenMetrics`) and the number of
+Spark jobs the sample ran (build and action, one job group each).
 """
 
 from __future__ import annotations
@@ -61,6 +62,7 @@ def main() -> None:
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
     q_entries = entrymod.queries()
     compilations = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
                     .METRIC_COMPILATION_TIME())
@@ -68,7 +70,7 @@ def main() -> None:
     out: dict[str, dict] = {}
     for name in args.queries:
         fn = q_entries[name]
-        spark.sparkContext.setJobDescription(f"bench_extra:{name}")
+        sc.setJobDescription(f"bench_extra:{name}")
         if args.tag:
             df = fn(spark, SF_DIR)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
@@ -90,8 +92,10 @@ def main() -> None:
                 df.count()
 
         action()  # warmup, untimed (bench.py methodology)
-        samples, cpu, compiles = [], [], []
-        for _ in range(args.repeats):
+        samples, cpu, compiles, jobs = [], [], [], []
+        for i in range(args.repeats):
+            group = f"bench_extra:{name}:{i}"
+            sc.setJobGroup(group, f"bench_extra:{name}")
             _, cpu0, jit0 = tree_usage()
             n0 = compilations.getCount()
             t0 = time.monotonic()
@@ -101,11 +105,16 @@ def main() -> None:
             _, cpu1, jit1 = tree_usage()
             jit_s = sum(v - jit0.get(tid, 0.0) for tid, v in jit1.items())
             cpu.append(round(sum(cpu1.values()) - sum(cpu0.values()) - jit_s, 3))
+            # the status store is fed by the listener bus: drain it
+            # before counting the group's jobs
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
         out[name] = {"min": min(samples), "samples": samples,
-                     "cpu_s": cpu, "compiles": compiles}
+                     "cpu_s": cpu, "compiles": compiles, "jobs": jobs}
         print(f"{name}: min={min(samples)} samples={samples} cpu_s={cpu} "
-              f"compiles={compiles}", file=sys.stderr)
-        spark.sparkContext.setJobDescription(None)
+              f"compiles={compiles} jobs={jobs}", file=sys.stderr)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
 
     print(json.dumps(out))
     spark.stop()

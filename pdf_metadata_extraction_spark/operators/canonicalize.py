@@ -297,8 +297,11 @@ def connected_components(
             done_fps.append(fp)
         rounds = len(done_fps)
         if rounds:
+            # the schema a round writes, from the analysed plan: no
+            # inference job (and id types an (int, long) input widens)
+            schema = _cc_star(_cc_star(e, large=True), large=False).schema
             e.unpersist()
-            e = spark.read.parquet(_round_dir(rounds)).persist()
+            e = spark.read.schema(schema).parquet(_round_dir(rounds)).persist()
             prev_hash = done_fps[-1]
             converged = rounds >= 2 and done_fps[-1] == done_fps[-2]
     cur_n = (
@@ -338,7 +341,7 @@ def connected_components(
         # is given (resumable across drivers), localCheckpoint otherwise
         if checkpoint_dir:
             e2.write.mode("overwrite").parquet(_round_dir(rounds))
-            e2 = spark.read.parquet(_round_dir(rounds))
+            e2 = spark.read.schema(e2.schema).parquet(_round_dir(rounds))
         else:
             e2 = e2.localCheckpoint(eager=True)
         # convergence: stable edge-set fingerprint (order-insensitive)

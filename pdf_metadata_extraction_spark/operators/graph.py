@@ -511,7 +511,7 @@ def pagerank_fixed(
             eout = e.coalesce(1) if row["n"] <= 1_000_000 else e
             eout.write.mode("overwrite").parquet(edir)
         e.unpersist()
-        e = spark.read.parquet(edir)
+        e = spark.read.schema(e.schema).parquet(edir)
     else:
         e = e.localCheckpoint(eager=True)
     nodes = (
@@ -586,7 +586,7 @@ def pagerank_fixed(
         for i in range(iters, 0, -1):
             if ckpt.fs_exists(spark, f"{_iter_dir(i)}/_SUCCESS"):
                 start_iter = i
-                r = spark.read.parquet(_iter_dir(i))
+                r = spark.read.schema(r.schema).parquet(_iter_dir(i))
                 break
     if redistribute_dangling:
         dangling = nodes.join(
@@ -648,7 +648,7 @@ def pagerank_fixed(
             # not funnel through one writer)
             out = r.coalesce(1) if n <= 1_000_000 else r
             out.write.mode("overwrite").parquet(_iter_dir(i + 1))
-            r = spark.read.parquet(_iter_dir(i + 1))
+            r = spark.read.schema(r.schema).parquet(_iter_dir(i + 1))
         elif (
             redistribute_dangling
             or lineage is not None

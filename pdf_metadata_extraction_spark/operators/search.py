@@ -205,17 +205,23 @@ def persistent_postings(
     pdir = f"{index_dir.rstrip('/')}/postings"
     ldir = f"{index_dir.rstrip('/')}/doc_lens"
     built = False
+    # the analysed plans give the read-back schemas, so a reused index
+    # is read without an inference job
+    postings, doc_lens = build_postings(docs, id_col, text_col)
     if not (
         ckpt.fs_exists(spark, f"{pdir}/_SUCCESS")
         and ckpt.fs_exists(spark, f"{ldir}/_SUCCESS")
     ):
-        postings, doc_lens = build_postings(docs, id_col, text_col)
         postings.repartition(F.col("term")).sortWithinPartitions(
             "term"
         ).write.mode("overwrite").parquet(pdir)
         doc_lens.write.mode("overwrite").parquet(ldir)
         built = True
-    return spark.read.parquet(pdir), spark.read.parquet(ldir), built
+    return (
+        spark.read.schema(postings.schema).parquet(pdir),
+        spark.read.schema(doc_lens.schema).parquet(ldir),
+        built,
+    )
 
 
 class Bm25Index:

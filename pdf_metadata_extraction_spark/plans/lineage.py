@@ -119,4 +119,4 @@ class LineageWriter:
         return out
 
     def read_lineage(self) -> DataFrame:
-        return self.spark.read.parquet(self.lineage_path)
+        return self.spark.read.schema(LINEAGE).parquet(self.lineage_path)

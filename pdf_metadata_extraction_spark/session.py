@@ -23,6 +23,22 @@ Design notes (100 TB target):
   query_mix`` (4 cores, 10 pairs, together with the ``_t`` spread
   made a per-query opt-in): ``op_cpu_ref_s`` 8.48 -> 6.16 s, traced
   ``op.cpu_jvm_s`` 9.74 -> 6.67 s.
+- No python call-site capture
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+  pyspark wraps every ``F.*`` and Column call: it walks the Python
+  stack and makes about 5 py4j round trips (``getActiveSession``,
+  whose lookup of the short class name scans the class path, then
+  ``isDefined``, ``get`` and the origin ``set``/``clear``). Building
+  one ``query_mix`` pass issued 5,823 py4j commands with it on and
+  2,438 with it off. Errors still raise with their SQL context; they
+  lose only the Python file:line fragment. Interleaved A/B of
+  ``perfbench/run.py --workload query_mix`` (4 cores, 10 pairs,
+  together with ``_t`` inferring each table's schema once):
+  ``op_cpu_ref_s`` 6.28 -> 5.17 s, lower in every pair. For a
+  debugging session pass
+  ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``;
+  pyspark caches the flag for the whole process on the first Column
+  op, so it must be set when the first session is built.
 - Shuffle scratch defaults to the OS temp dir, as does the query
   registry's checkpoint scratch; RAM-backed storage is an opt-in
   through ``SPARK_GRAFT_LOCAL_DIR`` (and ``SPARK_GRAFT_SCRATCH``).
@@ -130,6 +146,10 @@ def get_spark(
         # static conf: it only takes effect at session build (see the
         # module docstring for why and what it saved)
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # no python call-site capture per Column op (see the module
+        # docstring); pyspark reads this flag once per process, on the
+        # first Column op, so it too only takes effect at session build
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     daemon = python_daemon_module(master)
     if daemon:

@@ -485,3 +485,46 @@ def test_doc_cross_entropy_tokenizes_once(spark):
     ce.collect()
     final = ce._jdf.queryExecution().executedPlan().executedPlan().toString()
     assert final.count("Generate") == 1, final
+
+
+def test_t_infers_each_table_schema_once(spark, mix_corpus, tmp_path):
+    """A registry read infers a table file's schema with a one-task
+    footer job the first time the session reads the file; a second
+    read passes that schema and runs no job. A file rewritten at the
+    same path (new modification time and length) is inferred again."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as E
+
+    d = str(tmp_path)
+    path = f"{d}/documents.parquet"
+    shutil.copy(f"{mix_corpus}/documents.parquet", path)
+    sc = spark.sparkContext
+
+    def jobs_of(group: str):
+        sc.setJobGroup(group, group)
+        try:
+            df = E._t(spark, d, "documents")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group)), df
+
+    n_first, first = jobs_of("t_schema_first")
+    n_second, second = jobs_of("t_schema_second")
+    assert n_first >= 1, n_first
+    assert n_second == 0, n_second
+    assert second.schema == first.schema
+
+    table = pq.read_table(path)
+    pq.write_table(
+        table.append_column("extra", pa.array([1] * table.num_rows, pa.int64())),
+        path,
+    )
+    rewritten = E._t(spark, d, "documents")
+    assert rewritten.columns == first.columns + ["extra"]
+    assert rewritten.where("extra = 1").count() == table.num_rows

@@ -1,6 +1,8 @@
 """Session defaults that must hold outside a tuned box: with no env
 override, neither Spark's shuffle and spill directories nor the
-registry's checkpoint scratch sit on RAM-backed ``/dev/shm``."""
+registry's checkpoint scratch sit on RAM-backed ``/dev/shm``; and
+pyspark's per-Column call-site capture is off, while analysis errors
+still name what they could not resolve."""
 
 from __future__ import annotations
 
@@ -40,3 +42,30 @@ def test_fresh_session_keeps_scratch_off_tmpfs():
     for what, p in paths.items():
         for path in p if isinstance(p, list) else [p]:
             assert not os.path.realpath(path).startswith("/dev/shm"), (what, path)
+
+
+_CAPTURE_CHILD = """
+import json
+from pyspark.errors import AnalysisException
+from pyspark.errors.utils import is_debugging_enabled
+from pdf_metadata_extraction_spark.session import get_spark
+spark = get_spark(app_name="capture", master="local[1]", shuffle_partitions=1)
+try:
+    spark.range(3).select("no_such_column").collect()
+    err = None
+except AnalysisException as exc:
+    err = str(exc)
+print(json.dumps({"capture": is_debugging_enabled(), "error": err}))
+spark.stop()
+"""
+
+
+def test_fresh_session_skips_call_site_capture():
+    env = dict(os.environ, SPARK_GRAFT_WARM_PYTHON_POOL="0")
+    out = subprocess.run(
+        [sys.executable, "-c", _CAPTURE_CHILD], cwd=ROOT, env=env,
+        capture_output=True, text=True, timeout=300, check=True,
+    ).stdout
+    got = json.loads(out.strip().splitlines()[-1])
+    assert got["capture"] is False, got
+    assert got["error"] and "no_such_column" in got["error"], got
