@@ -19,8 +19,11 @@ default is .count() — the action the frozen bench times.
 Next to each wall sample it reports the layers an A/B needs to name:
 the process tree's CPU seconds (driver, JVM less its JIT compiler
 threads, python workers; `perfbench.run.tree_usage`), the number of
-classes Janino compiled (Spark's `CodegenMetrics`) and the number of
-Spark jobs the sample ran (build and action, one job group each).
+classes Janino compiled (Spark's `CodegenMetrics`), the number of
+Spark jobs the sample ran (build and action, one job group each), and,
+read right after the sample, the tree's python processes (the driver,
+daemons and workers: `py_procs`) and their summed RSS (`py_rss_mb`;
+pages the workers share with their daemon count once per process).
 """
 
 from __future__ import annotations
@@ -34,10 +37,23 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pdf_metadata_extraction_spark.session import default_cpus  # noqa: E402
-from perfbench.run import tree_usage  # noqa: E402
+from perfbench.run import process_tree, tree_usage  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = default_cpus()
+
+
+def python_processes() -> int:
+    """Live processes in this tree other than the JVM (the driver and the
+    python daemons and workers), counted as ``tree_usage`` sums RSS."""
+    n = 0
+    for p in process_tree():
+        try:
+            with open(f"/proc/{p}/comm") as fh:
+                n += fh.read().strip() != "java"
+        except OSError:
+            pass  # the process exited
+    return n
 
 
 def main() -> None:
@@ -92,7 +108,7 @@ def main() -> None:
                 df.count()
 
         action()  # warmup, untimed (bench.py methodology)
-        samples, cpu, compiles, jobs = [], [], [], []
+        samples, cpu, compiles, jobs, py_procs, py_rss = [], [], [], [], [], []
         for i in range(args.repeats):
             group = f"bench_extra:{name}:{i}"
             sc.setJobGroup(group, f"bench_extra:{name}")
@@ -102,7 +118,9 @@ def main() -> None:
             action()
             samples.append(round(time.monotonic() - t0, 3))
             compiles.append(compilations.getCount() - n0)
-            _, cpu1, jit1 = tree_usage()
+            rss1, cpu1, jit1 = tree_usage()
+            py_procs.append(python_processes())
+            py_rss.append(round(rss1["python"], 1))
             jit_s = sum(v - jit0.get(tid, 0.0) for tid, v in jit1.items())
             cpu.append(round(sum(cpu1.values()) - sum(cpu0.values()) - jit_s, 3))
             # the status store is fed by the listener bus: drain it
@@ -110,9 +128,11 @@ def main() -> None:
             sc._jsc.sc().listenerBus().waitUntilEmpty()
             jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
         out[name] = {"min": min(samples), "samples": samples,
-                     "cpu_s": cpu, "compiles": compiles, "jobs": jobs}
+                     "cpu_s": cpu, "compiles": compiles, "jobs": jobs,
+                     "py_procs": py_procs, "py_rss_mb": py_rss}
         print(f"{name}: min={min(samples)} samples={samples} cpu_s={cpu} "
-              f"compiles={compiles} jobs={jobs}", file=sys.stderr)
+              f"compiles={compiles} jobs={jobs} py_procs={py_procs} "
+              f"py_rss_mb={py_rss}", file=sys.stderr)
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setJobDescription(None)
 

@@ -34,7 +34,14 @@ Opt in with ``spark.python.daemon.module =
 pdf_metadata_extraction_spark.daemon_preload`` (``session.get_spark``
 sets it for ``local`` masters; env-overridable). The module must be
 importable on every worker host: true for local mode and for any
-cluster that ships the package."""
+cluster that ships the package.
+
+RDD and SQL python stages share one daemon per session. Spark starts a
+daemon per distinct worker env, and ``session.get_spark`` gives RDD
+jobs the ``SPARK_SIMPLIFIED_TRACEBACK`` variable the SQL runners add,
+so ``mapInArrow``, the Arrow UDFs and a ``createDataFrame(list)``
+collect all fork from this one process. It starts with the session's
+first python task, not at session build."""
 
 import gc
 import os

@@ -42,11 +42,36 @@ Design notes (100 TB target):
 - Shuffle scratch defaults to the OS temp dir, as does the query
   registry's checkpoint scratch; RAM-backed storage is an opt-in
   through ``SPARK_GRAFT_LOCAL_DIR`` (and ``SPARK_GRAFT_SCRATCH``).
+- One python worker pool per session, started by the first python
+  stage. Spark keeps one worker factory (one daemon and its forked
+  workers) per distinct worker env. The SQL runners (``mapInArrow``,
+  Arrow UDFs, ``mapInPandas``) add ``SPARK_SIMPLIFIED_TRACEBACK=1`` to
+  that env while ``spark.sql.execution.pyspark.udf.simplifiedTraceback
+  .enabled`` is on (the default); the core RDD runner, which a
+  ``collect()`` of a ``createDataFrame(list)`` frame runs, does not.
+  Each flagship iteration ran both (``link_options`` collects its
+  options frame), so the session held two daemons and 12 workers.
+  ``get_spark()`` therefore puts the same variable in
+  ``spark.executorEnv``, which pyspark copies into every python
+  function's env, so both kinds of stage share one factory; with
+  simplified tracebacks off it sets nothing and both envs lack it.
+  Choose them at session build (``extra_conf``): ``spark.executorEnv``
+  is fixed then, so a later ``spark.conf.set`` of the conf to false
+  leaves the variable in every worker env and errors stay simplified.
+  Turning the tracebacks off would unify the envs too, but an Arrow
+  UDF's error would then carry every pyspark worker frame. Nothing is
+  forked at session build: Spark starts the daemon when the first
+  python task arrives, so a session that runs no python stage pays
+  nothing. Interleaved A/B of ``perfbench/run.py`` (4 cores, one
+  shared pool and no warm-up against two pools and the eager warm-up):
+  ``kg_flagship`` ``python_rss_mb`` 1,488 -> 1,053 MB, lower in 10 of
+  10 pairs, with ``op_cpu_ref_s`` unchanged (1.55 s both); ``query_mix``
+  ``python_rss_mb`` 624 -> 151 MB and ``setup_s`` 2.15 -> 0.37 s
+  (8 pairs). The first python stage now pays the daemon start.
 """
 
 from __future__ import annotations
 
-import logging
 import os
 import tempfile
 
@@ -55,6 +80,9 @@ from pyspark.sql import SparkSession
 ARROW_BATCH = 10_000
 # generated classes kept compiled (``spark.sql.codegen.cache.maxEntries``)
 CODEGEN_CACHE_ENTRIES = 1000
+# the SQL conf under which Spark's SQL python runners add
+# SPARK_SIMPLIFIED_TRACEBACK=1 to the worker env
+SIMPLIFIED_TRACEBACK = "spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled"
 
 
 def python_daemon_module(master: str) -> str | None:
@@ -154,29 +182,10 @@ def get_spark(
     daemon = python_daemon_module(master)
     if daemon:
         b = b.config("spark.python.daemon.module", daemon)
+    # one worker env for RDD and SQL python stages, so they share one
+    # daemon (see the module docstring)
+    if str((extra_conf or {}).get(SIMPLIFIED_TRACEBACK, "true")).lower() == "true":
+        b = b.config("spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
-    spark = b.getOrCreate()
-    # round 7 (guide §4.5): eagerly spin up the python worker pool and
-    # the Arrow serialization path at SESSION build — one identity
-    # mapInPandas batch per core — instead of letting the first real
-    # python stage of the session pay the daemon launch + per-worker
-    # fork + Arrow init serially inside its own wall time. One-time
-    # infrastructure init, same class as JVM startup; ~0 marginal cost
-    # for sessions that never run a python stage is not achievable, so
-    # it is switchable off via env for such callers.
-    if os.environ.get("SPARK_GRAFT_WARM_PYTHON_POOL", "1") == "1":
-        warm_python_pool(spark)
-    return spark
-
-
-def warm_python_pool(spark: SparkSession) -> None:
-    """Run one identity python batch per core; a failure is logged as a
-    warning and never fails the session."""
-    try:
-        n = spark.sparkContext.defaultParallelism
-        spark.range(n).repartition(n).mapInPandas(lambda it: it, "id long").count()
-    except Exception:
-        logging.getLogger(__name__).warning(
-            "python worker pool warm-up failed", exc_info=True
-        )
+    return b.getOrCreate()

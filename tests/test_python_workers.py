@@ -2,17 +2,25 @@
 (``importlib.invalidate_caches()``, called by ``pyspark.worker`` before
 every task, must not re-parse an unchanged zip archive, and must still
 pick up a rewritten one), the frozen heap the workers inherit, the
-local-only daemon default, the default core count, and the logged pool
-warm-up."""
+local-only daemon default, the default core count, and the one python
+worker pool a session starts on first use (one daemon for RDD and SQL
+python stages, none at build) whose Arrow UDF errors stay short."""
 
 from __future__ import annotations
 
 import gc
 import importlib
+import json
 import os
+import subprocess
 import sys
 import zipfile
 import zipimport
+
+import pyarrow as pa
+import pytest
+from pyspark.errors import PythonException
+from pyspark.sql import functions as F
 
 from pdf_metadata_extraction_spark.daemon_preload import guard_zip_directories
 
@@ -105,15 +113,93 @@ def test_daemon_default_only_on_local_master(monkeypatch):
     assert python_daemon_module("local[4]") is None
 
 
-def test_warm_up_failure_is_logged_not_raised(caplog):
-    from pdf_metadata_extraction_spark.session import warm_python_pool
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-    class NoContext:
-        @property
-        def sparkContext(self):
-            raise RuntimeError("no context")
+# A fresh session's python processes, read at three points: right after
+# get_spark(), after one mapInArrow, and after an RDD-runner job (the
+# collect of a createDataFrame(list) frame) plus the flagship's
+# link_options over segments_from_pages. A daemon is a daemon_preload
+# process whose parent is the JVM; its workers are its children.
+_POOL_CHILD = """
+import json, os
+from pdf_metadata_extraction_spark.operators.linking import link_options
+from pdf_metadata_extraction_spark.plans.pipeline import segments_from_pages
+from pdf_metadata_extraction_spark.session import get_spark
+from pdf_metadata_extraction_spark.sources.pages_synth import row_for_doc
+from pyspark.sql import functions as F
 
-    with caplog.at_level("WARNING"):
-        warm_python_pool(NoContext())
-    assert "warm-up failed" in caplog.text
-    assert "no context" in caplog.text
+def children():
+    kids = {}
+    for p in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{p}/stat") as fh:
+                ppid = int(fh.read().rsplit(")", 1)[1].split()[1])
+        except (OSError, IndexError, ValueError):
+            continue
+        kids.setdefault(ppid, []).append(int(p))
+    return kids
+
+def cmdline(pid):
+    try:
+        with open(f"/proc/{pid}/cmdline", "rb") as fh:
+            return fh.read().decode(errors="replace")
+    except OSError:
+        return ""
+
+def pool():
+    kids = children()
+    jvm = [p for p in kids.get(os.getpid(), []) if "java" in cmdline(p)]
+    under_jvm = [c for p in jvm for c in kids.get(p, [])]
+    daemons = [p for p in under_jvm if "daemon_preload" in cmdline(p)]
+    return {"jvm": len(jvm), "python_children": len(under_jvm),
+            "daemons": len(daemons),
+            "workers": sum(len(kids.get(d, [])) for d in daemons)}
+
+spark = get_spark(app_name="pool", master="local[2]", shuffle_partitions=2)
+seen = {"build": pool()}
+spark.range(4).mapInArrow(lambda it: it, "id long").collect()
+seen["mapInArrow"] = pool()
+spark.createDataFrame([(i, str(i)) for i in range(8)], "k int, v string").collect()
+rows = [row_for_doc(i) for i in range(6, 30)]
+pages = spark.createDataFrame(
+    [(r["url"], r["html"]) for r in rows], "url string, html binary")
+options = spark.createDataFrame(
+    [("mentions", "spark", "spark", True)],
+    "extraction_name string, option_id string, label string, multi_value boolean")
+segs = segments_from_pages(pages).withColumn("extraction_name", F.lit("mentions"))
+link_options(segs, options).collect()
+seen["link_options"] = pool()
+print(json.dumps(seen))
+spark.stop()
+"""
+
+
+@pytest.fixture(scope="module")
+def pool_counts():
+    out = subprocess.run(
+        [sys.executable, "-c", _POOL_CHILD], cwd=ROOT, env=dict(os.environ),
+        capture_output=True, text=True, timeout=300, check=True,
+    ).stdout
+    return json.loads(out.strip().splitlines()[-1])
+
+
+def test_python_pool_starts_on_first_python_stage(pool_counts):
+    assert pool_counts["build"]["jvm"] == 1, pool_counts
+    assert pool_counts["build"]["python_children"] == 0, pool_counts
+    assert pool_counts["mapInArrow"]["daemons"] == 1, pool_counts
+
+
+def test_rdd_and_sql_python_stages_share_one_daemon(pool_counts):
+    assert pool_counts["link_options"]["daemons"] == 1, pool_counts
+
+
+def test_arrow_udf_error_names_user_exception_without_worker_frames(spark):
+    def boom(xs: pa.Array) -> pa.Array:
+        raise ValueError("bad page 42")
+
+    udf = F.arrow_udf(boom, "long")
+    with pytest.raises(PythonException) as err:
+        spark.range(2).select(udf("id")).collect()
+    text = str(err.value)
+    assert "ValueError" in text and "bad page 42" in text, text
+    assert "pyspark/worker.py" not in text, text

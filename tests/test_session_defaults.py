@@ -32,7 +32,6 @@ def test_fresh_session_keeps_scratch_off_tmpfs():
     env = {k: v for k, v in os.environ.items() if k not in (
         "SPARK_GRAFT_LOCAL_DIR", "SPARK_GRAFT_SCRATCH", "SPARK_LOCAL_DIRS",
     )}
-    env["SPARK_GRAFT_WARM_PYTHON_POOL"] = "0"
     out = subprocess.run(
         [sys.executable, "-c", _CHILD], cwd=ROOT, env=env,
         capture_output=True, text=True, timeout=300, check=True,
@@ -61,9 +60,8 @@ spark.stop()
 
 
 def test_fresh_session_skips_call_site_capture():
-    env = dict(os.environ, SPARK_GRAFT_WARM_PYTHON_POOL="0")
     out = subprocess.run(
-        [sys.executable, "-c", _CAPTURE_CHILD], cwd=ROOT, env=env,
+        [sys.executable, "-c", _CAPTURE_CHILD], cwd=ROOT,
         capture_output=True, text=True, timeout=300, check=True,
     ).stdout
     got = json.loads(out.strip().splitlines()[-1])
