@@ -17,6 +17,8 @@ On a cluster swap the parquet writes for Iceberg tables
 from __future__ import annotations
 
 import time
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,6 +62,15 @@ def run_kg_pipeline(
     """Full pipeline with stage checkpoints + lineage. Returns the stage
     DataFrames {segments, linked, edges, nodes} (+ {host_edges,
     host_ranks} when ``link_graph``).
+
+    Every stage goes through one local helper, ``stage``. It checkpoints
+    the stage's frame under the job description ``kg_run:{stage}``, and
+    a fresh stage writes its ``all`` row, its per-partition rows and its
+    gate/extraction row in ONE lineage append. A gate's input_rows is
+    the count its upstream stage's checkpoint already took, so no frame
+    is counted twice. A stage reused from disk runs no count job and
+    appends no row: rerunning a finished ``run_id`` appends only
+    ``pipeline_total``.
 
     ``normalize_urls``: opt-in ingest dedup — rewrite urls to canonical
     form and keep one fetch per canonical url (earliest warc_ts,
@@ -206,6 +217,63 @@ def run_kg_pipeline(
     with a ``frontier_scheduling`` lineage row."""
     lw = LineageWriter(spark, work_dir, run_id)
     t0 = time.monotonic()
+    # each frame a fresh stage wrote, beside the row count its
+    # checkpoint took: a stage's input_rows is its upstream's count,
+    # never a recount
+    counted: list[tuple[DataFrame, int]] = []
+
+    def rows(df: DataFrame) -> int:
+        for f, n in counted:
+            if f is df:
+                return n
+        # the run's input, or a stage reused from disk: counted only
+        # when a freshly run stage needs it
+        n = df.count()
+        counted.append((df, n))
+        return n
+
+    def stage(
+        name: str,
+        df: DataFrame,
+        partition_by: list[str] | None = None,
+        gate: tuple[str, DataFrame] | None = None,
+        channel: tuple[str, DataFrame] | None = None,
+        out_rows: Callable[[DataFrame], int] | None = None,
+    ) -> DataFrame:
+        """Checkpoint one stage, its jobs described as ``kg_run:{name}``.
+        A stage already on disk is read back: no job, no lineage row.
+        A fresh stage writes its ``all`` row, its per-partition rows and
+        its gate/extraction row in ONE lineage append.
+
+        ``gate=(row, src)``: the stage keeps a subset of ``src``; its
+        ``all`` row and the ``row`` row both carry src's count as
+        input_rows. ``channel=(row, src)``: the stage derives a new
+        table from ``src``; only the ``row`` row carries src's count.
+        The row's output_rows is the stage's count, or
+        ``out_rows(frame)`` when given."""
+        with _job_description(spark, f"kg_run:{name}"):
+            if lw.committed(name):
+                return lw.read_stage(name, df)
+            t = time.monotonic()
+            row, src = gate or channel or (None, None)
+            n_in = -1 if src is None else rows(src)
+            out, lineage = lw.write_stage(
+                name, df, partition_by, n_in if gate else -1
+            )
+            n_out = lineage[0][4]  # the all row's output_rows
+            counted.append((out, n_out))
+            if row is not None:
+                lineage.append((
+                    row, "all", 0, n_in,
+                    out_rows(out) if out_rows else n_out,
+                    int((time.monotonic() - t) * 1000),
+                ))
+            lw.append(lineage)
+            return out
+
+    # page stages keep the input's columns, so they share its layout
+    by_bucket = ["url_bucket"] if "url_bucket" in pages.columns else None
+    out_extra: dict[str, DataFrame] = {}
 
     if normalize_urls:
         from pdf_metadata_extraction_spark.operators.urlnorm import (
@@ -213,24 +281,14 @@ def run_kg_pipeline(
             dedup_pages_by_canonical_url,
         )
 
-        # quarantine audit BEFORE the drop: the lineage table must be
+        # quarantine audit beside the drop: the lineage table must be
         # able to show that input_rows > output_rows and say why
-        n_in = pages.count()
-        n_bad = (
-            canonicalize_urls(pages)
+        pages = stage(
+            "pages_clean", dedup_pages_by_canonical_url(pages), by_bucket,
+            gate=("pages_quarantined", pages),
+            out_rows=lambda _: canonicalize_urls(pages)
             .where(F.col("canonical_url").isNull())
-            .count()
-        )
-        lw.record(
-            "pages_quarantined", input_rows=n_in, output_rows=n_bad,
-            wall_ms=0,
-        )
-        cleaned = dedup_pages_by_canonical_url(pages)
-        pages = lw.checkpoint_stage(
-            "pages_clean", cleaned, input_rows=n_in,
-            partition_by=(
-                ["url_bucket"] if "url_bucket" in cleaned.columns else None
-            ),
+            .count(),
         )
 
     if follow_redirects:
@@ -239,8 +297,6 @@ def run_kg_pipeline(
             with_meta_refresh,
         )
 
-        tr = time.monotonic()
-        n_in_r = pages.count()
         redirects = (
             with_meta_refresh(pages.select("url", "html"))
             .where(F.col("refresh_abs").isNotNull())
@@ -249,27 +305,20 @@ def run_kg_pipeline(
                 F.col("refresh_abs").alias("dst"),
             )
         )
-        chains = lw.checkpoint_stage(
+        chains = stage(
             "url_redirects", resolve_redirect_chains(redirects, max_hops=3)
         )
-        out_redirects = chains
+        out_extra["url_redirects"] = chains
         # a refresh page is an alias shell, not content: drop it from
         # the corpus; the url_redirects stage keeps (src, final_url,
         # n_hops, status) so canonicalization can alias resolved
         # chains and a crawl ledger can audit cycles/truncations
-        kept_r = pages.join(
-            chains.select(F.col("src").alias("url")), "url", "left_anti"
-        )
-        pages = lw.checkpoint_stage(
-            "pages_noredirect", kept_r, input_rows=n_in_r,
-            partition_by=(
-                ["url_bucket"] if "url_bucket" in kept_r.columns else None
+        pages = stage(
+            "pages_noredirect",
+            pages.join(
+                chains.select(F.col("src").alias("url")), "url", "left_anti"
             ),
-        )
-        lw.record(
-            "pages_redirect_gate", input_rows=n_in_r,
-            output_rows=pages.count(),
-            wall_ms=int((time.monotonic() - tr) * 1000),
+            by_bucket, gate=("pages_redirect_gate", pages),
         )
 
     txt = None
@@ -284,23 +333,17 @@ def run_kg_pipeline(
                 main_content,
             )
 
-            tm = time.monotonic()
-            n_in_m = pages.count()
             mc = main_content(pages.select("url", "html")).select(
                 "url",
                 F.col("main_text").alias("text"),
                 "n_blocks_kept",
                 "n_blocks_dropped",
             )
-            mc_stage = lw.checkpoint_stage("pages_main_content", mc)
-            lw.record(
-                "pages_content_gate", input_rows=n_in_m,
-                output_rows=mc_stage.where(
-                    F.col("n_blocks_kept") > 0
-                ).count(),
-                wall_ms=int((time.monotonic() - tm) * 1000),
-            )
-            txt = mc_stage.select("url", "text")
+            txt = stage(
+                "pages_main_content", mc,
+                channel=("pages_content_gate", pages),
+                out_rows=lambda m: m.where(F.col("n_blocks_kept") > 0).count(),
+            ).select("url", "text")
         else:
             from pdf_metadata_extraction_spark.operators.extract import (
                 extract_text,
@@ -308,9 +351,7 @@ def run_kg_pipeline(
 
             # the byte-identity extractor runs ONCE; the gate and the
             # corpus export both read this stage
-            txt = lw.checkpoint_stage(
-                "pages_text", extract_text(pages.select("url", "html"))
-            )
+            txt = stage("pages_text", extract_text(pages.select("url", "html")))
 
     if quality_gate:
         from pyspark.sql import Window
@@ -319,8 +360,6 @@ def run_kg_pipeline(
             quality_filter,
         )
 
-        tq = time.monotonic()
-        n_in_q = pages.count()
         passing = quality_filter(txt, id_col="url", text_col="text").select(
             F.col("id").alias("url")
         )
@@ -335,17 +374,9 @@ def run_kg_pipeline(
             .where(F.col("_rn") == 1)
             .select("url")
         )
-        gated = pages.join(survivors, "url", "left_semi")
-        pages = lw.checkpoint_stage(
-            "pages_quality", gated, input_rows=n_in_q,
-            partition_by=(
-                ["url_bucket"] if "url_bucket" in gated.columns else None
-            ),
-        )
-        lw.record(
-            "pages_quality_gate", input_rows=n_in_q,
-            output_rows=pages.count(),
-            wall_ms=int((time.monotonic() - tq) * 1000),
+        pages = stage(
+            "pages_quality", pages.join(survivors, "url", "left_semi"),
+            by_bucket, gate=("pages_quality_gate", pages),
         )
 
     if decontam_eval is not None:
@@ -353,8 +384,6 @@ def run_kg_pipeline(
             contamination,
         )
 
-        td = time.monotonic()
-        n_in_d = pages.count()
         # only judge pages still alive after the earlier gates
         live_txt = txt.join(pages.select("url"), "url", "left_semi")
         clean = (
@@ -364,17 +393,9 @@ def run_kg_pipeline(
             .where(F.col("contaminated") == 0)
             .select("url")
         )
-        decon = pages.join(clean, "url", "left_semi")
-        pages = lw.checkpoint_stage(
-            "pages_decontam", decon, input_rows=n_in_d,
-            partition_by=(
-                ["url_bucket"] if "url_bucket" in decon.columns else None
-            ),
-        )
-        lw.record(
-            "pages_decontam_gate", input_rows=n_in_d,
-            output_rows=pages.count(),
-            wall_ms=int((time.monotonic() - td) * 1000),
+        pages = stage(
+            "pages_decontam", pages.join(clean, "url", "left_semi"),
+            by_bucket, gate=("pages_decontam_gate", pages),
         )
 
     if domain_cap is not None:
@@ -385,8 +406,6 @@ def run_kg_pipeline(
             canonicalize_urls,
         )
 
-        tc = time.monotonic()
-        n_in_c = pages.count()
         doms = canonicalize_urls(pages.select("url")).select(
             "url", "registered_domain"
         )
@@ -398,46 +417,30 @@ def run_kg_pipeline(
         keep = kept_dom.unionByName(
             doms.where(F.col("registered_domain").isNull()).select("url")
         )
-        capped = pages.join(keep, "url", "left_semi")
-        pages = lw.checkpoint_stage(
-            "pages_domain_capped", capped, input_rows=n_in_c,
-            partition_by=(
-                ["url_bucket"] if "url_bucket" in capped.columns else None
-            ),
-        )
-        lw.record(
-            "pages_domain_cap", input_rows=n_in_c,
-            output_rows=pages.count(),
-            wall_ms=int((time.monotonic() - tc) * 1000),
+        pages = stage(
+            "pages_domain_capped", pages.join(keep, "url", "left_semi"),
+            by_bucket, gate=("pages_domain_cap", pages),
         )
 
-    out_extra: dict[str, DataFrame] = {}
-    if follow_redirects:
-        out_extra["url_redirects"] = out_redirects
     if export_corpus:
         # the (url, text) table a tokenizer/packing job consumes —
         # texts of pages every enabled gate kept
-        corpus = txt.join(pages.select("url"), "url", "left_semi")
-        out_extra["corpus"] = lw.checkpoint_stage("corpus_export", corpus)
+        corpus = stage(
+            "corpus_export", txt.join(pages.select("url"), "url", "left_semi")
+        )
+        out_extra["corpus"] = corpus
         if pack_seq_len is not None:
             from pdf_metadata_extraction_spark.operators.packing import (
                 pack_sequences,
             )
 
-            tp = time.monotonic()
-            manifest = pack_sequences(
-                out_extra["corpus"], pack_seq_len,
-                id_col="url", text_col="text",
-            )
-            out_extra["sequences"] = lw.checkpoint_stage(
-                "sequence_manifest", manifest
-            )
-            lw.record(
-                "sequence_packing",
-                input_rows=out_extra["corpus"].count(),
-                output_rows=out_extra["sequences"]
-                .select("seq_id").distinct().count(),
-                wall_ms=int((time.monotonic() - tp) * 1000),
+            out_extra["sequences"] = stage(
+                "sequence_manifest",
+                pack_sequences(
+                    corpus, pack_seq_len, id_col="url", text_col="text"
+                ),
+                channel=("sequence_packing", corpus),
+                out_rows=lambda m: m.select("seq_id").distinct().count(),
             )
     if link_graph:
         from pdf_metadata_extraction_spark.operators.graph import (
@@ -450,20 +453,19 @@ def run_kg_pipeline(
         pages_txt = pages.select(
             "url", F.col("html").cast("string").alias("html_text")
         )
-        host_edges = lw.checkpoint_stage(
-            "host_edges", host_link_edges(pages_txt)
-        )
-        ranks = pagerank_fixed(
-            host_edges.select(
-                F.col("src_host").alias("id_a"),
-                F.col("dst_host").alias("id_b"),
-            ),
-            iters=3,
-            checkpoint_dir=lw.stage_path("host_rank_iters"),
-            lineage=lw,
-        )
+        host_edges = stage("host_edges", host_link_edges(pages_txt))
+        with _job_description(spark, "kg_run:host_ranks"):
+            ranks = pagerank_fixed(
+                host_edges.select(
+                    F.col("src_host").alias("id_a"),
+                    F.col("dst_host").alias("id_b"),
+                ),
+                iters=3,
+                checkpoint_dir=lw.stage_path("host_rank_iters"),
+                lineage=lw,
+            )
         out_extra["host_edges"] = host_edges
-        out_extra["host_ranks"] = lw.checkpoint_stage("host_ranks", ranks)
+        out_extra["host_ranks"] = stage("host_ranks", ranks)
 
     if frontier:
         if not link_graph:
@@ -482,7 +484,6 @@ def run_kg_pipeline(
             schedule_frontier,
         )
 
-        tf = time.monotonic()
         pages_txt = pages.select(
             "url", F.col("html").cast("string").alias("html_text")
         )
@@ -504,24 +505,16 @@ def run_kg_pipeline(
         cand = cand.distinct().join(
             pages.select("url"), "url", "left_anti"
         )
-        cand = lw.checkpoint_stage("frontier_candidates", cand)
-        n_cand = cand.count()
+        cand = stage("frontier_candidates", cand)
         allowed = cand
         if robots is not None:
-            tg = time.monotonic()
             rules = parse_robots(robots)
-            allowed = (
+            allowed = stage(
+                "frontier_allowed",
                 robots_allowed(cand, rules, agent=frontier_agent)
                 .where(F.col("robots_allowed"))
-                .select("url")
-            )
-            allowed = lw.checkpoint_stage(
-                "frontier_allowed", allowed, input_rows=n_cand
-            )
-            lw.record(
-                "frontier_robots_gate", input_rows=n_cand,
-                output_rows=allowed.count(),
-                wall_ms=int((time.monotonic() - tg) * 1000),
+                .select("url"),
+                gate=("frontier_robots_gate", cand),
             )
         sched = schedule_frontier(
             allowed,
@@ -541,13 +534,8 @@ def run_kg_pipeline(
             sched = sched.withColumn(
                 "delay_s", F.lit(None).cast("long")
             )
-        out_extra["frontier"] = lw.checkpoint_stage(
-            "frontier_schedule", sched, input_rows=n_cand
-        )
-        lw.record(
-            "frontier_scheduling", input_rows=n_cand,
-            output_rows=out_extra["frontier"].count(),
-            wall_ms=int((time.monotonic() - tf) * 1000),
+        out_extra["frontier"] = stage(
+            "frontier_schedule", sched, gate=("frontier_scheduling", cand)
         )
 
     segs = segments_from_pages(pages).withColumn(
@@ -555,8 +543,7 @@ def run_kg_pipeline(
     )
     # deterministic salt rides along so a resumed bucket recomputes with
     # the same layout (SURVEY.md §7.3 #4)
-    segs = with_salt(segs, "url", n_salt)
-    segs = lw.checkpoint_stage("segments", segs, partition_by=["salt"])
+    segs = stage("segments", with_salt(segs, "url", n_salt), ["salt"])
 
     if segment_dedup is not None:
         from pdf_metadata_extraction_spark.operators.boilerplate import (
@@ -564,8 +551,6 @@ def run_kg_pipeline(
             line_hash_col,
         )
 
-        ts = time.monotonic()
-        n_in_s = segs.count()
         dup = duplicated_line_hashes(
             segs, "url", "text", min_docs=segment_dedup
         )
@@ -574,18 +559,13 @@ def run_kg_pipeline(
             .join(dup, "lh", "left_anti")
             .drop("lh")
         )
-        segs = lw.checkpoint_stage(
-            "segments_kept", kept, input_rows=n_in_s,
-            partition_by=["salt"],
-        )
-        lw.record(
-            "segments_boiler_gate", input_rows=n_in_s,
-            output_rows=segs.count(),
-            wall_ms=int((time.monotonic() - ts) * 1000),
+        segs = stage(
+            "segments_kept", kept, ["salt"],
+            gate=("segments_boiler_gate", segs),
         )
 
     linked = link_options(segs, options).where(F.size("values") > 0)
-    linked = lw.checkpoint_stage("linked", linked, partition_by=["salt"])
+    linked = stage("linked", linked, ["salt"])
 
     edges = triples_to_edges(
         linked.select(
@@ -597,11 +577,11 @@ def run_kg_pipeline(
             F.col("boxes").alias("segments_boxes"),
         )
     )
-    edges = lw.checkpoint_stage("edges", edges)
+    edges = stage("edges", edges)
 
     # canonical edge set: distinct (subj, pred, obj) — provenance rows stay
     # in the `edges` stage; this is the graph-facing table (SURVEY §2.6)
-    edges_dedup = lw.checkpoint_stage(
+    edges_dedup = stage(
         "edges_dedup", edges.dropDuplicates(["subj", "pred", "obj"])
     )
 
@@ -612,13 +592,9 @@ def run_kg_pipeline(
             jsonld_triples,
         )
 
-        ts = time.monotonic()
-        ej = lw.checkpoint_stage("edges_jsonld", jsonld_triples(pages))
-        out_extra["edges_jsonld"] = ej
-        lw.record(
-            "jsonld_extraction", input_rows=pages.count(),
-            output_rows=ej.count(),
-            wall_ms=int((time.monotonic() - ts) * 1000),
+        out_extra["edges_jsonld"] = stage(
+            "edges_jsonld", jsonld_triples(pages),
+            channel=("jsonld_extraction", pages),
         )
 
     if tables:
@@ -628,13 +604,9 @@ def run_kg_pipeline(
             table_triples,
         )
 
-        ts = time.monotonic()
-        et = lw.checkpoint_stage("edges_tables", table_triples(pages))
-        out_extra["edges_tables"] = et
-        lw.record(
-            "table_extraction", input_rows=pages.count(),
-            output_rows=et.count(),
-            wall_ms=int((time.monotonic() - ts) * 1000),
+        out_extra["edges_tables"] = stage(
+            "edges_tables", table_triples(pages),
+            channel=("table_extraction", pages),
         )
 
     if fuse:
@@ -647,13 +619,9 @@ def run_kg_pipeline(
             fuse_edges as _fuse_edges,
         )
 
-        ts = time.monotonic()
-        n_in_f = edges.count()
-        fused = lw.checkpoint_stage("edges_fused", _fuse_edges(edges))
-        out_extra["edges_fused"] = fused
-        lw.record(
-            "edges_fusion", input_rows=n_in_f, output_rows=fused.count(),
-            wall_ms=int((time.monotonic() - ts) * 1000),
+        out_extra["edges_fused"] = stage(
+            "edges_fused", _fuse_edges(edges),
+            channel=("edges_fusion", edges),
         )
 
     if export_ntriples:
@@ -667,14 +635,10 @@ def run_kg_pipeline(
             to_ntriples,
         )
 
-        ts = time.monotonic()
         nt_src = out_extra.get("edges_fused", edges_dedup)
-        nt = lw.checkpoint_stage("edges_ntriples", to_ntriples(nt_src))
-        out_extra["edges_ntriples"] = nt
-        lw.record(
-            "ntriples_export", input_rows=nt_src.count(),
-            output_rows=nt.count(),
-            wall_ms=int((time.monotonic() - ts) * 1000),
+        out_extra["edges_ntriples"] = stage(
+            "edges_ntriples", to_ntriples(nt_src),
+            channel=("ntriples_export", nt_src),
         )
 
     # canonicalize object surface forms (obj strings) → nodes table
@@ -683,16 +647,30 @@ def run_kg_pipeline(
     )
     # CC rounds checkpoint under the run's stage tree: a killed run
     # resumes mid-canonicalization (rounds are deterministic)
-    nodes = canonicalize(
-        surface, "id", "text", lineage=lw,
-        cc_checkpoint_dir=lw.stage_path("nodes_cc_rounds"),
-    ).select(
-        F.col("id").alias("node_id"),
-        F.col("canonical_id"),
-    )
-    nodes = lw.checkpoint_stage("nodes", nodes)
+    with _job_description(spark, "kg_run:nodes"):
+        nodes = canonicalize(
+            surface, "id", "text", lineage=lw,
+            cc_checkpoint_dir=lw.stage_path("nodes_cc_rounds"),
+        ).select(
+            F.col("id").alias("node_id"),
+            F.col("canonical_id"),
+        )
+    nodes = stage("nodes", nodes)
 
-    lw.record("pipeline_total", input_rows=-1, output_rows=edges.count(),
+    lw.record("pipeline_total", input_rows=-1, output_rows=rows(edges),
               wall_ms=int((time.monotonic() - t0) * 1000))
     return {"segments": segs, "linked": linked, "edges": edges,
             "edges_dedup": edges_dedup, "nodes": nodes, **out_extra}
+
+
+@contextmanager
+def _job_description(spark: SparkSession, text: str) -> Iterator[None]:
+    """Describe the jobs the block runs (Spark's status store groups
+    jobs by description); the caller's description comes back after."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(prev)

@@ -139,14 +139,8 @@ def get_spark(
         # Measured min-of-4 at sf0.1: uniform win or tie across 12
         # mixed queries (e.g. ce_quality_tiers 1.67→1.35, lang_id
         # 1.12→0.90, graph_hits 1.73→1.52), no regression.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "256m"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
@@ -167,10 +161,7 @@ def get_spark(
         # over sort-merge when its size conditions hold — skips both
         # sides' sorts. Min-of-3 at sf0.1: asof_event_state 1.68→0.33,
         # minhash_dup_pairs 1.70→0.53, no query slower.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         # static conf: it only takes effect at session build (see the
         # module docstring for why and what it saved)
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))

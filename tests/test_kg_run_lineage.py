@@ -91,6 +91,19 @@ def test_kg_run_quality_gate(spark, tmp_path):
     assert {r["url"] for r in out["segments"].select("url").collect()} <= kept
     assert out["edges"].count() > 0
 
+    # resume: every stage is reused from disk, so the finished run_id
+    # records nothing again but its pipeline_total
+    run_kg_pipeline(
+        spark, pages, _options(spark), work, run_id="q1", quality_gate=True
+    )
+    alls = [
+        r["stage"] for r in spark.read.parquet(f"{work}/lineage").collect()
+        if r["partition_range"] == "all"
+    ]
+    assert alls.count("pipeline_total") == 2
+    once = [s for s in alls if s != "pipeline_total"]
+    assert sorted(once) == sorted(set(once)), once
+
 
 def test_kg_run_domain_cap_and_corpus_export(spark, tmp_path):
     """Round-5 curation stages composed in the runner: the extracted
@@ -447,6 +460,24 @@ def test_partition_lineage_cap_is_not_silent(spark, tmp_path):
     assert len(over) == 1 and over[0]["output_rows"] == 30
     # stage-level metrics are NOT duplicated onto partition rows
     assert all(r["input_rows"] is None and r["wall_ms"] is None for r in parts)
+    # the all, partition and overflow rows are one append: one file
+    files = {
+        r[0] for r in lw.read_lineage()
+        .where(F.col("stage") == "bucketed")
+        .select(F.input_file_name())
+        .collect()
+    }
+    assert len(files) == 1, files
+    # and one append is one job, the write's: the rows are an Arrow
+    # table, planned as a LocalTableScan, so no python job runs first
+    sc = spark.sparkContext
+    sc.setJobGroup("lineage_record", "one lineage append")
+    try:
+        lw.record("probe", input_rows=1, output_rows=1, wall_ms=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert len(sc.statusTracker().getJobIdsForGroup("lineage_record")) == 1
 
 
 def test_cc_checkpoint_dir_rejects_stale_input(spark, tmp_path):
@@ -637,8 +668,9 @@ def test_kg_run_fusion_stage(spark, tmp_path):
 def test_checkpoint_stage_empty_output_roundtrips(spark, tmp_path):
     """An aggressive gate can legitimately empty a stage; the
     checkpoint must round-trip the EMPTY table (explicit schema — no
-    parquet inference on a part-file-less dir) and record a 0-row
-    lineage entry, both on first write and on marker-reuse resume."""
+    parquet inference on a part-file-less dir): the first write records
+    a 0-row lineage entry, and the marker-reuse resume reads the same
+    empty stage back."""
     from pdf_metadata_extraction_spark.plans.lineage import LineageWriter
 
     lw = LineageWriter(spark, str(tmp_path / "w"), "e1")
@@ -652,6 +684,34 @@ def test_checkpoint_stage_empty_output_roundtrips(spark, tmp_path):
     lineage = spark.read.parquet(str(tmp_path / "w" / "lineage")).collect()
     rows = [r for r in lineage if r["stage"] == "gate_out"]
     assert rows and rows[0]["output_rows"] == 0
+
+
+def test_checkpoint_stage_reuses_fs_uri_root(spark, tmp_path):
+    """A stage checkpointed under a filesystem-URI root (here file:, on
+    a cluster hdfs:/s3a:) is found again on the next call, through the
+    same Hadoop FileSystem test as the CC and PageRank checkpoints: it
+    is reused, and no lineage row is appended."""
+    import os
+
+    from pdf_metadata_extraction_spark.plans.lineage import LineageWriter
+
+    root = tmp_path / "w"
+    lw = LineageWriter(spark, "file://" + str(root), "u1")
+    df = spark.range(10).selectExpr("id", "CAST(id % 2 AS INT) AS salt")
+    assert lw.checkpoint_stage("s", df, partition_by=["salt"]).count() == 10
+
+    def appends():
+        return sorted(
+            f for f in os.listdir(root / "lineage") if f.endswith(".parquet")
+        )
+
+    first = appends()
+    # reused: the rows on disk come back, not the (empty) new plan's
+    again = lw.checkpoint_stage(
+        "s", df.where("id < 0"), partition_by=["salt"]
+    )
+    assert again.count() == 10
+    assert appends() == first
 
 
 def test_kg_run_redirect_gate(spark, tmp_path):
