@@ -58,6 +58,10 @@ def _fuzzy_sql_pattern(label: str) -> str:
     return f"(^|[^0-9a-z])({body})($|[^0-9a-z])"
 
 
+# the word tokenizer and the whitespace fold: the operators' Spark
+# spelling and, for the oracles, the DuckDB one
+from pdf_metadata_extraction_spark.operators import text  # noqa: E402
+
 # language-ID oracle derives from the OPERATOR's marker dict — single
 # source of truth, the two engines cannot drift
 from pdf_metadata_extraction_spark.operators.textstats import (  # noqa: E402
@@ -167,12 +171,21 @@ def _scratch_dir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT[0])
 
 
-def _docs_norm(docs: DataFrame) -> DataFrame:
-    return docs.withColumn(
-        "_norm",
-        F.concat(
-            F.lit(" "), F.lower(F.regexp_replace("text", r"\s+", " ")), F.lit(" ")
-        ),
+def _entity_labels(spark: SparkSession) -> DataFrame:
+    """``_ENTITY_LABELS`` as a one-column ``label`` frame."""
+    return spark.createDataFrame([(l,) for l in _ENTITY_LABELS], "label string")
+
+
+def _label_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each document joined with every entity label that its padded
+    whitespace fold holds as whole words (``_label_mentions_sql``
+    mirrors it)."""
+    d = _t(spark, sf_dir, "documents").withColumn(
+        "_norm", F.concat(F.lit(" "), text.fold(), F.lit(" "))
+    )
+    return d.join(
+        F.broadcast(_entity_labels(spark)),
+        F.instr("_norm", F.concat(F.lit(" "), "label", F.lit(" "))) > 0,
     )
 
 
@@ -332,7 +345,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         d = _t(spark, sf_dir, "documents")
         return (
             d.select(
-                F.explode(F.split(F.lower("text"), "[^a-z0-9]+")).alias("word")
+                F.explode(text.words()).alias("word")
             )
             .where(F.length("word") >= 2)
             .groupBy("word")
@@ -422,13 +435,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # ------------------------------------------------ J3 dictionary link
     def j3_dict_match(spark, sf_dir):
-        d = _docs_norm(_t(spark, sf_dir, "documents"))
-        labels = spark.createDataFrame([(l,) for l in _ENTITY_LABELS], "label string")
         return (
-            d.join(
-                F.broadcast(labels),
-                F.instr(F.col("_norm"), F.concat(F.lit(" "), F.col("label"), F.lit(" "))) > 0,
-            )
+            _label_mentions(spark, sf_dir)
             .groupBy("label")
             .agg(F.count("*").alias("n_docs"))
         )
@@ -455,12 +463,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # ------------------------------------------------ KG mention triples
     def kg_mention_triples(spark, sf_dir):
-        d = _docs_norm(_t(spark, sf_dir, "documents"))
-        labels = spark.createDataFrame([(l,) for l in _ENTITY_LABELS], "label string")
-        return d.join(
-            F.broadcast(labels),
-            F.instr(F.col("_norm"), F.concat(F.lit(" "), F.col("label"), F.lit(" "))) > 0,
-        ).select(
+        return _label_mentions(spark, sf_dir).select(
             F.col("doc_id").alias("subj"),
             F.lit("mentions").alias("pred"),
             F.col("label").alias("obj"),
@@ -475,16 +478,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         tie-break, and reports support / competitors / confidence."""
         from pdf_metadata_extraction_spark.operators.fusion import fuse_edges
 
-        d = _docs_norm(_t(spark, sf_dir, "documents"))
-        labels = spark.createDataFrame(
-            [(l,) for l in _ENTITY_LABELS], "label string"
-        )
-        edges = d.join(
-            F.broadcast(labels),
-            F.instr(
-                F.col("_norm"), F.concat(F.lit(" "), F.col("label"), F.lit(" "))
-            ) > 0,
-        ).select(
+        edges = _label_mentions(spark, sf_dir).select(
             F.col("label").alias("subj"),
             F.lit("lang").alias("pred"),
             F.col("lang").alias("obj"),
@@ -502,16 +496,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             cooccurrence_pmi,
         )
 
-        d = _docs_norm(_t(spark, sf_dir, "documents"))
-        labels = spark.createDataFrame(
-            [(l,) for l in _ENTITY_LABELS], "label string"
-        )
-        mentions = d.join(
-            F.broadcast(labels),
-            F.instr(
-                F.col("_norm"), F.concat(F.lit(" "), F.col("label"), F.lit(" "))
-            ) > 0,
-        ).select("doc_id", "label")
+        mentions = _label_mentions(spark, sf_dir).select("doc_id", "label")
         return cooccurrence_pmi(mentions, doc_col="doc_id", ent_col="label")
 
     # ------------------------------------------------ J4 positional zip
@@ -557,7 +542,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         text is never rescanned."""
         d = _t(spark, sf_dir, "documents")
         corpus_hashes = d.where("doc_id < 250").select(
-            F.md5(dedup.normalized_text("text")).alias("text_hash")
+            F.md5(text.fold()).alias("text_hash")
         )
         batch0 = d.where("doc_id >= 200 AND doc_id < 350").select(
             "doc_id", "text"
@@ -1135,13 +1120,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             extract_anchor_texts,
         )
 
-        labels = spark.createDataFrame(
-            [(l,) for l in _ENTITY_LABELS], "label string"
-        )
         anchors = extract_anchor_texts(_link_corpus(spark, sf_dir))
         return (
             anchors.join(
-                F.broadcast(labels),
+                F.broadcast(_entity_labels(spark)),
                 F.trim(F.lower(F.col("anchor_text"))) == F.col("label"),
             )
             .select(
@@ -2870,10 +2852,8 @@ def _simhash_bands_sql(source_sql: str) -> str:
         )
     return f"""
 words AS (
-  SELECT DISTINCT id, w FROM (
-    SELECT doc_id AS id, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS w
-    FROM ({source_sql})
-  ) WHERE w <> ''
+  SELECT DISTINCT doc_id AS id, unnest({text.duck_words()}) AS w
+  FROM ({source_sql})
 ), bit_sums AS (
   SELECT id, {', '.join(sums)} FROM words GROUP BY id
 ), sigs AS (
@@ -2936,7 +2916,6 @@ def _bm25_sql(terms: list[str], topk: int = 15,
     """Mirror of search.bm25_rank: per-term tf as array expressions,
     integer corpus stats (order-exact), fixed-order left-assoc score
     with the identical literal sequence Spark evaluates — bit-exact."""
-    words = "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), w -> w <> '')"
     tf_cols = ", ".join(
         f"CAST(len(list_filter(w, x -> x = '{t}')) AS BIGINT) AS tf_{i}"
         for i, t in enumerate(terms)
@@ -2964,7 +2943,7 @@ def _bm25_sql(terms: list[str], topk: int = 15,
     return f"""
 WITH base AS (
   SELECT doc_id AS id, CAST(len(w) AS BIGINT) AS dl, {tf_cols}
-  FROM (SELECT doc_id, {words} AS w FROM documents)
+  FROM (SELECT doc_id, {text.duck_words()} AS w FROM documents)
 ), stats AS (
   SELECT CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(dl) AS BIGINT) AS sum_dl,
          {df_cols}
@@ -3261,9 +3240,7 @@ def _repetition_sql() -> str:
 
     return f"""
 WITH wl AS (
-  SELECT doc_id AS id,
-    list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                x -> x <> '') AS w
+  SELECT doc_id AS id, {text.duck_words()} AS w
   FROM documents
 ), g AS (
   SELECT id, w,
@@ -3546,8 +3523,7 @@ WITH corpus AS ({_link_corpus_sql()}),
 {_href_resolved_sql(_anchor_texts_body_sql(), carry=", anchor_text")}
 SELECT dst_host, term, CAST(count(*) AS BIGINT) AS n FROM (
   SELECT {_sql_host_of('abs_url')} AS dst_host,
-         unnest(list_filter(regexp_split_to_array(lower(anchor_text), '[^a-z0-9]+'),
-                            w -> w <> '')) AS term
+         unnest({text.duck_words("anchor_text")}) AS term
   FROM resolved WHERE abs_url IS NOT NULL
 ) WHERE dst_host <> ''
 GROUP BY 1, 2
@@ -3589,17 +3565,28 @@ FROM resolved GROUP BY 1
 """
 
 
+_LABELS_SQL = ", ".join(f"('{l}')" for l in _ENTITY_LABELS)
+
+
+def _label_mentions_sql(cols: str) -> str:
+    """Mirror of ``_label_mentions``: ``cols`` of each document, with
+    every entity label its padded whitespace fold holds as whole words."""
+    return f"""SELECT {cols}, label
+  FROM (SELECT {cols}, concat(' ', {text.duck_fold()}, ' ') AS _norm FROM documents) d
+  JOIN (VALUES {_LABELS_SQL}) AS o(label)
+    ON position(concat(' ', o.label, ' ') IN d._norm) > 0"""
+
+
 def _anchor_mentions_sql() -> str:
     """Mirror of queries().anchor_text_mentions: the full-inner-text
     anchor extraction (nested tags stripped — round-4 verdict #4) +
     exact dictionary match."""
-    labels_values = ", ".join(f"('{l}')" for l in _ENTITY_LABELS)
     return f"""
 WITH corpus AS ({_link_corpus_sql()}),
 am AS ({_anchor_texts_body_sql()}
 )
 SELECT src_url AS subj, 'links_to' AS pred, href AS obj, label AS mention
-FROM am JOIN (VALUES {labels_values}) AS o(label)
+FROM am JOIN (VALUES {_LABELS_SQL}) AS o(label)
   ON trim(lower(anchor_text)) = o.label
 """
 
@@ -4135,8 +4122,7 @@ def _lang_ngram_sql() -> str:
 WITH w(tri, lang, wt, lang_rank) AS (VALUES {values}),
 norm AS (
   SELECT doc_id AS id,
-         concat(' ', substr(lower(regexp_replace(text, '\\s+', ' ', 'g')),
-                            1, {LANG_NGRAM_PREFIX}), ' ') AS t
+         concat(' ', substr({text.duck_fold()}, 1, {LANG_NGRAM_PREFIX}), ' ') AS t
   FROM documents
 ),
 tris AS (
@@ -4170,7 +4156,7 @@ def _minhash_sig_sql(perms: int, source_sql: str, where: str = "") -> str:
     return f"""
 WITH src AS ({source_sql}),
 norm AS (
-  SELECT doc_id AS id, lower(regexp_replace(text, '\\s+', ' ', 'g')) AS t
+  SELECT doc_id AS id, {text.duck_fold()} AS t
   FROM src {where}
 ), sh AS (
   SELECT id, unnest(list_distinct(
@@ -4341,7 +4327,6 @@ FROM (
 
 
 def oracle_sql() -> dict[str, str]:
-    labels_values = ", ".join(f"('{l}')" for l in _ENTITY_LABELS)
     emb_explode = """
   SELECT vec_id, i AS pos, CAST(embedding[i] AS DOUBLE) AS val
   FROM embeddings, unnest(generate_series(1, 64)) AS t(i)
@@ -4364,9 +4349,9 @@ def oracle_sql() -> dict[str, str]:
             "SELECT p_partkey, CAST(round(p_size * 0.75, 6) AS DOUBLE) AS ingest_left, "
             "CAST(round(p_size * (4.0/3.0), 6) AS DOUBLE) AS egress_left FROM part"
         ),
-        "a1_frequent_words": """
+        "a1_frequent_words": f"""
 SELECT word, count(*) AS cnt FROM (
-  SELECT unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS word
+  SELECT unnest({text.duck_words()}) AS word
   FROM documents
 ) WHERE length(word) >= 2
 GROUP BY word ORDER BY cnt DESC, word ASC LIMIT 20
@@ -4411,11 +4396,7 @@ SELECT user_id, CAST(sum(new_s) AS BIGINT) AS n_sessions FROM (
             "GROUP BY date_trunc('hour', ts), event_type"
         ),
         "j3_dict_match": f"""
-SELECT label, count(*) AS n_docs
-FROM (SELECT concat(' ', lower(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS _norm
-      FROM documents) d
-JOIN (VALUES {labels_values}) AS o(label)
-  ON position(concat(' ', o.label, ' ') IN d._norm) > 0
+SELECT label, count(*) AS n_docs FROM ({_label_mentions_sql("doc_id")})
 GROUP BY label
 """,
         "j3_fuzzy_match": "SELECT label, n_docs FROM (\n"
@@ -4427,19 +4408,12 @@ GROUP BY label
         + "\n) WHERE n_docs > 0",
         "kg_mention_triples": f"""
 SELECT doc_id AS subj, 'mentions' AS pred, label AS obj
-FROM (SELECT doc_id, concat(' ', lower(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS _norm
-      FROM documents) d
-JOIN (VALUES {labels_values}) AS o(label)
-  ON position(concat(' ', o.label, ' ') IN d._norm) > 0
+FROM ({_label_mentions_sql("doc_id")})
 """,
         "kg_fused_triples": f"""
 WITH votes AS (
   SELECT DISTINCT label AS subj, 'lang' AS pred, lang AS obj, doc_id AS src
-  FROM (SELECT doc_id, lang,
-               concat(' ', lower(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS _norm
-        FROM documents) d
-  JOIN (VALUES {labels_values}) AS o(label)
-    ON position(concat(' ', o.label, ' ') IN d._norm) > 0
+  FROM ({_label_mentions_sql("doc_id, lang")})
   WHERE lang IS NOT NULL
 ), sup AS (
   SELECT subj, pred, obj, CAST(count(*) AS BIGINT) AS support
@@ -4461,12 +4435,7 @@ WHERE w.rn = 1
 """,
         "entity_cooccurrence_pmi": f"""
 WITH mentions AS (
-  SELECT DISTINCT doc_id, label
-  FROM (SELECT doc_id,
-               concat(' ', lower(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS _norm
-        FROM documents) d
-  JOIN (VALUES {labels_values}) AS o(label)
-    ON position(concat(' ', o.label, ' ') IN d._norm) > 0
+  SELECT DISTINCT doc_id, label FROM ({_label_mentions_sql("doc_id")})
 ), nd AS (
   SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs FROM mentions
 ), ec AS (
@@ -4492,19 +4461,18 @@ WITH en AS (SELECT doc_id AS en_doc, row_number() OVER (ORDER BY doc_id) AS posi
             FROM documents WHERE lang = 'fr')
 SELECT position, en_doc, fr_doc FROM en JOIN fr USING (position)
 """,
-        "dedup_exact": """
+        "dedup_exact": f"""
 WITH corpus AS (SELECT doc_id, text FROM documents
   UNION ALL SELECT doc_id + 1000000, upper(text) FROM documents)
-SELECT md5(lower(regexp_replace(text, '\\s+', ' ', 'g'))) AS text_hash,
+SELECT md5({text.duck_fold()}) AS text_hash,
        count(*) AS n_dups, min(doc_id) AS canonical_id
 FROM corpus GROUP BY 1 HAVING count(*) > 1
 """,
-        "dedup_membership": """
+        "dedup_membership": f"""
 WITH corpus AS (SELECT doc_id, text FROM documents
   UNION ALL SELECT doc_id + 1000000, upper(text) FROM documents),
 hashed AS (
-  SELECT doc_id AS id,
-         md5(lower(regexp_replace(text, '\\s+', ' ', 'g'))) AS text_hash
+  SELECT doc_id AS id, md5({text.duck_fold()}) AS text_hash
   FROM corpus
 ), win AS (
   SELECT id, text_hash,
@@ -4531,8 +4499,7 @@ WHERE a.id < b.id
         "ngram_jaccard": f"""
 WITH corpus AS ({_PERTURBED_SQL}),
 norm AS (
-  SELECT doc_id AS id,
-         substr(lower(regexp_replace(text, '\\s+', ' ', 'g')), 1, 80) AS t
+  SELECT doc_id AS id, substr({text.duck_fold()}, 1, 80) AS t
   FROM corpus
 ), grams AS (
   SELECT id, unnest(list_distinct(
@@ -4559,8 +4526,7 @@ cand AS (
 ),
 corpus AS ({_PERTURBED_SQL}),
 norm AS (
-  SELECT doc_id AS id,
-         substr(lower(regexp_replace(text, '\\s+', ' ', 'g')), 1, 80) AS t
+  SELECT doc_id AS id, substr({text.duck_fold()}, 1, 80) AS t
   FROM corpus
 ), grams AS (
   SELECT id, unnest(list_distinct(
@@ -4680,9 +4646,9 @@ SELECT doc_id AS id, length(text) AS n_chars,
   round(length(regexp_replace(text, '[^0-9]', '', 'g')) / greatest(length(text), 1), 6) AS digit_ratio,
   round(length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) / greatest(length(text), 1), 6) AS punct_ratio,
   round(
-    len(list_filter(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), w -> w <> ''),
+    len(list_filter({text.duck_words()},
         w -> list_contains({list(_QUALITY_STOPWORDS)!r}, w))) /
-    greatest(len(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), w -> w <> '')), 1),
+    greatest(len({text.duck_words()}), 1),
     6) AS stopword_ratio,
   round(CAST(greatest(length(text), 1) AS DOUBLE) /
         (length(text) - length(replace(text, ' ', '')) + 1), 6) AS mean_word_len,
@@ -4704,18 +4670,17 @@ SELECT doc_id AS id,
        length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS BIGINT) AS bpe_tokens_est
 FROM documents
 """,
-        "doc_fingerprint": """
+        "doc_fingerprint": f"""
 SELECT doc_id AS id,
-  md5(lower(regexp_replace(text, '\\s+', ' ', 'g'))) AS fp_md5,
-  CAST(concat('0x', substr(md5(lower(regexp_replace(text, '\\s+', ' ', 'g'))), 1, 15)) AS BIGINT) AS fp_int
+  md5({text.duck_fold()}) AS fp_md5,
+  CAST(concat('0x', substr(md5({text.duck_fold()}), 1, 15)) AS BIGINT) AS fp_int
 FROM documents
 """,
         # winnowing mirror: same k-gram md5-prefix hash, same per-window
         # min, same distinct (k=8, w=4, prefix 512)
-        "winnow_fp": """
+        "winnow_fp": f"""
 WITH norm AS (
-  SELECT doc_id AS id,
-         substr(lower(regexp_replace(text, '\\s+', ' ', 'g')), 1, 512) AS t
+  SELECT doc_id AS id, substr({text.duck_fold()}, 1, 512) AS t
   FROM documents WHERE doc_id < 200
 ), hs AS (
   SELECT id,
@@ -5118,10 +5083,9 @@ SELECT size, CAST(count(*) AS BIGINT) AS n_components FROM sizes GROUP BY 1
     )
     # incremental exact dedup: same normalization, same min-id
     # survivor rule, same three-way classification
-    _NT = "md5(lower(regexp_replace(text, '\\s+', ' ', 'g')))"
     out["incremental_dedup"] = f"""
 WITH corpus AS (
-  SELECT {_NT} AS text_hash FROM documents WHERE doc_id < 250
+  SELECT md5({text.duck_fold()}) AS text_hash FROM documents WHERE doc_id < 250
 ),
 batch AS (
   SELECT doc_id, text FROM documents WHERE doc_id >= 200 AND doc_id < 350
@@ -5129,7 +5093,7 @@ batch AS (
   SELECT doc_id + 100000 AS doc_id, text FROM documents
   WHERE doc_id >= 200 AND doc_id < 280
 ),
-hashed AS (SELECT doc_id AS id, {_NT} AS text_hash FROM batch),
+hashed AS (SELECT doc_id AS id, md5({text.duck_fold()}) AS text_hash FROM batch),
 r AS (
   SELECT id, text_hash,
     text_hash IN (SELECT text_hash FROM corpus) AS in_corpus,
@@ -5181,13 +5145,12 @@ WHERE pick_rank <= 20
     # same 1-based gram indexing as decontam.word_ngram_col: DuckDB
     # range(1, len-n+2) == Spark sequence(1, size-n+1); w[i:i+n-1]
     # (1-based inclusive) == slice(w, i, n)
-    _WSQL = "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), w -> w <> '')"
     _EV_SQL = (
         "CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)),1,15)) AS BIGINT)"
         " % 20 = 0"
     )
     out["decontam_overlap"] = f"""
-WITH toks AS (SELECT doc_id, {_WSQL} AS w, {_EV_SQL} AS is_ev FROM documents),
+WITH toks AS (SELECT doc_id, {text.duck_words()} AS w, {_EV_SQL} AS is_ev FROM documents),
 grams AS (SELECT doc_id, is_ev,
    CASE WHEN len(w) >= 7
         THEN list_transform(range(1, len(w)-5), i -> array_to_string(w[i:i+6], ' '))
@@ -5212,7 +5175,7 @@ WHERE NOT t.is_ev
     # span surgery: eval grams as in decontam_overlap; hit grams expand
     # to member token positions; kept tokens rebuild positionally
     out["decontam_scrubbed"] = f"""
-WITH toks0 AS (SELECT doc_id, {_WSQL} AS w, {_EV_SQL} AS is_ev FROM documents),
+WITH toks0 AS (SELECT doc_id, {text.duck_words()} AS w, {_EV_SQL} AS is_ev FROM documents),
 corpus AS (SELECT doc_id, w FROM toks0 WHERE NOT is_ev AND doc_id < 200),
 evg AS (SELECT DISTINCT gram FROM (
   SELECT unnest(CASE WHEN len(w) >= 7
@@ -5249,7 +5212,7 @@ SELECT t.doc_id, coalesce(r.text_clean, '') AS text_clean, t.n_tokens,
 FROM tot t LEFT JOIN reb r USING (doc_id)
 """
     _GRAMS4_SQL = f"""
-toks AS (SELECT doc_id, source, {_WSQL} AS w FROM documents),
+toks AS (SELECT doc_id, source, {text.duck_words()} AS w FROM documents),
 grams AS (SELECT doc_id, source,
    CASE WHEN len(w) >= 4
         THEN list_transform(range(1, len(w)-2), i -> array_to_string(w[i:i+3], ' '))
@@ -5282,7 +5245,7 @@ FROM toks t LEFT JOIN hits h ON t.doc_id = h.doc_id
     # it is produced, then scaled to integer micro-nats — all sums are
     # exact BIGINT arithmetic (no float-accumulation order dependence)
     out["unigram_ce"] = f"""
-WITH toks AS (SELECT doc_id, unnest({_WSQL}) AS word FROM documents),
+WITH toks AS (SELECT doc_id, unnest({text.duck_words()}) AS word FROM documents),
 tf AS (SELECT doc_id, word, CAST(count(*) AS BIGINT) AS tf FROM toks GROUP BY 1,2),
 cnts AS (SELECT word, CAST(count(*) AS BIGINT) AS c FROM toks GROUP BY 1),
 tot AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM cnts),
@@ -5302,7 +5265,7 @@ FROM documents d LEFT JOIN per p ON d.doc_id = p.doc_id
     # same micro-nat discipline (round6(ln)·1e6 → BIGINT sums)
     out["bigram_ce"] = f"""
 WITH dd AS (
-  SELECT doc_id, {_WSQL} AS l FROM documents
+  SELECT doc_id, {text.duck_words()} AS l FROM documents
 ),
 pairs AS (
   SELECT doc_id, l[i] AS w1, l[i+1] AS w2
@@ -5529,7 +5492,7 @@ SELECT tr.q_ppm, r.value, tr.n FROM tr JOIN r ON r.rnk = tr.tgt
     # cost ln(2·total_target); the keep gate compares round6(ln(u))·1e6
     # against the integer weight with u = (md5_ppm(id)+1)/1e6
     out["dsir_resample_gate"] = f"""
-WITH toks AS (SELECT doc_id, unnest({_WSQL}) AS word FROM documents),
+WITH toks AS (SELECT doc_id, unnest({text.duck_words()}) AS word FROM documents),
 tf AS (SELECT doc_id, word, CAST(count(*) AS BIGINT) AS tf
        FROM toks GROUP BY 1, 2),
 rc AS (SELECT word, CAST(count(*) AS BIGINT) AS c FROM toks GROUP BY 1),
@@ -5538,7 +5501,7 @@ lmr AS (SELECT word,
         CAST(round(round(ln(t * 1.0 / c), 6) * 1000000.0, 0) AS BIGINT)
           AS cr
         FROM rc, rtot),
-ttoks AS (SELECT doc_id, unnest({_WSQL}) AS word FROM documents
+ttoks AS (SELECT doc_id, unnest({text.duck_words()}) AS word FROM documents
           WHERE source IN ('src0', 'src1', 'src2')),
 tc AS (SELECT word, CAST(count(*) AS BIGINT) AS c FROM ttoks GROUP BY 1),
 ttot AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM tc),
@@ -5565,7 +5528,7 @@ SELECT d.doc_id,
 FROM documents d LEFT JOIN per p ON d.doc_id = p.doc_id
 """
     out["tfidf_topk"] = f"""
-WITH toks AS (SELECT doc_id, unnest({_WSQL}) AS word FROM documents),
+WITH toks AS (SELECT doc_id, unnest({text.duck_words()}) AS word FROM documents),
 tf AS (SELECT doc_id, word, CAST(count(*) AS BIGINT) AS tf FROM toks GROUP BY 1,2),
 dfreq AS (SELECT word, CAST(count(*) AS BIGINT) AS dfc FROM tf GROUP BY 1),
 nd AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n FROM documents),
@@ -5636,11 +5599,10 @@ FROM tot t LEFT JOIN reb r USING (doc_id)
     # sequence packing: the oracle uses the plain global-window cumsum
     # (fine in one DuckDB process); the Spark side must produce the
     # IDENTICAL offsets from its distributed two-pass prefix sum
-    out["packed_sequences"] = """
+    out["packed_sequences"] = f"""
 WITH counts AS (
   SELECT doc_id AS id,
-    CAST(len(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-             w -> w <> '')) AS BIGINT) AS n_tokens
+    CAST(len({text.duck_words()}) AS BIGINT) AS n_tokens
   FROM documents),
 offs AS (
   SELECT id, n_tokens,

@@ -17,7 +17,10 @@ df.write.format("noop") which computes every column (guide §1.4);
 default is .count() — the action the frozen bench times.
 
 Next to each wall sample it reports the layers an A/B needs to name:
-the process tree's CPU seconds (driver, JVM less its JIT compiler
+the seconds the python build of the DataFrame took (`build_s`), the
+py4j commands the driver sent the JVM during the sample (`py4j`, build
+and action, counted at py4j's `GatewayClient.send_command`), the
+process tree's CPU seconds (driver, JVM less its JIT compiler
 threads, python workers; `perfbench.run.tree_usage`), the number of
 classes Janino compiled (Spark's `CodegenMetrics`), the number of
 Spark jobs the sample ran (build and action, one job group each), and,
@@ -56,6 +59,25 @@ def python_processes() -> int:
     return n
 
 
+def count_py4j(sc) -> list[int]:
+    """Count, in the returned one-element list, every command the driver
+    sends the JVM from now on: one per Java call, field read or object
+    creation. The releases of collected Java references are left out:
+    py4j's finalizer thread sends them whenever python's garbage
+    collector runs, so they would make the count vary run to run."""
+    client = sc._gateway._gateway_client
+    n = [0]
+    send = client.send_command
+
+    def counted(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            n[0] += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counted
+    return n
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
@@ -82,6 +104,7 @@ def main() -> None:
     q_entries = entrymod.queries()
     compilations = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
                     .METRIC_COMPILATION_TIME())
+    sent = count_py4j(sc)
 
     out: dict[str, dict] = {}
     for name in args.queries:
@@ -100,23 +123,31 @@ def main() -> None:
         if args.explain_only:
             continue
 
-        def action():
+        def action() -> float:
+            """Build and run the query; returns the build's seconds."""
+            t = time.monotonic()
             df = fn(spark, SF_DIR)
+            built = time.monotonic() - t
             if args.noop:
                 df.write.format("noop").mode("overwrite").save()
             else:
                 df.count()
+            return built
 
         action()  # warmup, untimed (bench.py methodology)
-        samples, cpu, compiles, jobs, py_procs, py_rss = [], [], [], [], [], []
+        samples, build, py4j, cpu, compiles, jobs, py_procs, py_rss = (
+            [], [], [], [], [], [], [], []
+        )
         for i in range(args.repeats):
             group = f"bench_extra:{name}:{i}"
             sc.setJobGroup(group, f"bench_extra:{name}")
             _, cpu0, jit0 = tree_usage()
             n0 = compilations.getCount()
+            s0 = sent[0]
             t0 = time.monotonic()
-            action()
+            build.append(round(action(), 3))
             samples.append(round(time.monotonic() - t0, 3))
+            py4j.append(sent[0] - s0)
             compiles.append(compilations.getCount() - n0)
             rss1, cpu1, jit1 = tree_usage()
             py_procs.append(python_processes())
@@ -128,11 +159,12 @@ def main() -> None:
             sc._jsc.sc().listenerBus().waitUntilEmpty()
             jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
         out[name] = {"min": min(samples), "samples": samples,
+                     "build_s": build, "py4j": py4j,
                      "cpu_s": cpu, "compiles": compiles, "jobs": jobs,
                      "py_procs": py_procs, "py_rss_mb": py_rss}
-        print(f"{name}: min={min(samples)} samples={samples} cpu_s={cpu} "
-              f"compiles={compiles} jobs={jobs} py_procs={py_procs} "
-              f"py_rss_mb={py_rss}", file=sys.stderr)
+        print(f"{name}: min={min(samples)} samples={samples} build_s={build} "
+              f"py4j={py4j} cpu_s={cpu} compiles={compiles} jobs={jobs} "
+              f"py_procs={py_procs} py_rss_mb={py_rss}", file=sys.stderr)
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setJobDescription(None)
 

@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdf_metadata_extraction_spark.operators import text
 from pdf_metadata_extraction_spark.operators.decontam import word_ngram_col
 
 
@@ -50,9 +51,7 @@ def _doc_grams(
     return df.select(
         F.col(id_col).alias("id"),
         F.col(group_col).alias("grp"),
-        F.expr(
-            f"filter(split(lower({text_col}), '[^a-z0-9]+'), x -> x != '')"
-        ).alias("_w"),
+        text.words(text_col).alias("_w"),
     ).select("id", "grp", word_ngram_col("_w", n).alias("_g"))
 
 

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pdf_metadata_extraction_spark.operators import text
+
 DEFAULT_PERMS = 16
 DEFAULT_BANDS = 4  # 4 bands × 4 rows
 
@@ -40,7 +42,7 @@ def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame
     """Distinct char n-gram shingles of the lower-cased, space-collapsed text."""
     return df.select(
         F.col(id_col).alias("id"),
-        F.lower(F.regexp_replace(F.col(text_col), r"\s+", " ")).alias("_t"),
+        text.fold(text_col).alias("_t"),
     ).select(
         "id",
         F.explode_outer(

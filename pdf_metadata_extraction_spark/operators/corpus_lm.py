@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_TOKENS = "filter(split(lower({t}), '[^a-z0-9]+'), x -> x != '')"
+from pdf_metadata_extraction_spark.operators import text
 
 
 def _doc_tf(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -47,7 +47,7 @@ def _doc_tf(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return (
         df.select(
             F.col(id_col).alias("id"),
-            F.explode(F.expr(_TOKENS.format(t=text_col))).alias("word"),
+            F.explode(text.words(text_col)).alias("word"),
         )
         .groupBy("id", "word")
         .agg(F.count("*").cast("long").alias("tf"))
@@ -229,7 +229,7 @@ def _doc_bigram_tf(
     """(id, w1, w2, tf) — per-document bigram frequency, rolled up
     BEFORE any model join (the same skew-compression discipline as
     ``_doc_tf``: a doc contributes 'of the' once, not 400 times)."""
-    toks = _TOKENS.format(t=text_col)
+    toks = text.WORDS.format(t=text_col)
     return (
         df.select(
             F.col(id_col).alias("id"),
@@ -285,7 +285,7 @@ def bigram_lm(
     )
     counts = (
         train.select(
-            F.explode(F.expr(_TOKENS.format(t=text_col))).alias("w2")
+            F.explode(text.words(text_col)).alias("w2")
         )
         .groupBy("w2")
         .agg(F.count("*").cast("long").alias("c"))
@@ -423,7 +423,7 @@ def dsir_weights(
         df.select(
             F.col(id_col).alias("id"),
             F.expr(target_pred).alias("_is_t"),
-            F.explode(F.expr(_TOKENS.format(t=text_col))).alias("word"),
+            F.explode(text.words(text_col)).alias("word"),
         )
         .groupBy("id", "word")
         .agg(

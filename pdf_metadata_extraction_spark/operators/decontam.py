@@ -29,9 +29,9 @@ Scale design (the 100x lens):
 - The per-doc result is one narrow row per input doc (id + 3 ints) —
   re-joinable to the corpus by key without carrying text.
 
-Determinism: tokenisation is the repo-wide convention
-(``filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')`` — identical
-to textstats.repetition_signals and the dedup family), and the
+Determinism: tokenisation is the repo-wide word tokenizer
+(``operators/text.py``, shared with textstats.repetition_signals, the
+dedup family and the DuckDB oracle), and the
 "contaminated" verdict uses integer arithmetic (``n_hit * den >=
 n_grams * num``) so no float threshold edge can disagree cross-engine.
 """
@@ -40,6 +40,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pdf_metadata_extraction_spark.operators import text
 
 
 def word_ngram_col(words_col: str, n: int):
@@ -64,9 +66,7 @@ def word_ngram_col(words_col: str, n: int):
 def _tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return df.select(
         F.col(id_col).alias("id"),
-        F.expr(
-            f"filter(split(lower({text_col}), '[^a-z0-9]+'), x -> x != '')"
-        ).alias("_w"),
+        text.words(text_col).alias("_w"),
     )
 
 

@@ -20,13 +20,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdf_metadata_extraction_spark.operators import text
+
 SIMHASH_BITS = 64
 SIMHASH_BANDS = 4  # 4 × 16-bit bands (MinHash-LSH-style banded layout)
 _BAND_BITS = SIMHASH_BITS // SIMHASH_BANDS
-
-
-def normalized_text(text_col: str = "text"):
-    return F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
 
 
 def exact_duplicates(
@@ -46,7 +44,7 @@ def exact_duplicates(
     if with_members:
         aggs.append(F.array_sort(F.collect_list("id")).alias("member_ids"))
     return (
-        df.select(F.col(id_col).alias("id"), F.md5(normalized_text(text_col)).alias("text_hash"))
+        df.select(F.col(id_col).alias("id"), F.md5(text.fold(text_col)).alias("text_hash"))
         .groupBy("text_hash")
         .agg(*aggs)
         .where(F.col("n_dups") > 1)
@@ -61,7 +59,7 @@ def duplicate_membership(df: DataFrame, id_col: str, text_col: str = "text") -> 
 
     hashed = df.select(
         F.col(id_col).alias("id"),
-        F.md5(normalized_text(text_col)).alias("text_hash"),
+        F.md5(text.fold(text_col)).alias("text_hash"),
     )
     w = Window.partitionBy("text_hash")
     return (
@@ -108,7 +106,7 @@ def incremental_exact(
 
     hashed = new_docs.select(
         F.col(id_col).alias("id"),
-        F.md5(normalized_text(text_col)).alias("text_hash"),
+        F.md5(text.fold(text_col)).alias("text_hash"),
     )
     known = (
         corpus_hashes.select("text_hash").distinct()
@@ -137,12 +135,6 @@ def incremental_exact(
     return classified, updated
 
 
-def _token_words(text_col: str):
-    return F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda w: w != ""
-    )
-
-
 def simhash(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     """64-bit bit-majority simhash over distinct token hashes, banded.
 
@@ -162,7 +154,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     """
     words = df.select(
         F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(_token_words(text_col))).alias("w"),
+        F.explode(F.array_distinct(text.words(text_col))).alias("w"),
     ).withColumn("h", F.md5("w"))
     aggs = []
     for b in range(SIMHASH_BANDS):
@@ -250,7 +242,7 @@ def char_ngrams(df: DataFrame, id_col: str, text_col: str = "text", n: int = 3,
     linear in corpus size)."""
     return df.select(
         F.col(id_col).alias("id"),
-        F.substring(normalized_text(text_col), 1, prefix_chars).alias("_t"),
+        F.substring(text.fold(text_col), 1, prefix_chars).alias("_t"),
     ).select(
         "id",
         F.explode(

@@ -62,6 +62,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pdf_metadata_extraction_spark.operators import text
 from pdf_metadata_extraction_spark.operators.urlnorm import URL_RE
 
 # anchored to <a elements (round-3 ADVICE: a bare href=" matched
@@ -347,12 +348,7 @@ def anchor_term_profile(
     resolved = resolve_hrefs(anchors).where(F.col("abs_url").isNotNull())
     terms = resolved.select(
         _host_of(F.col("abs_url")).alias("dst_host"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col("anchor_text")), "[^a-z0-9]+"),
-                lambda w: w != "",
-            )
-        ).alias("term"),
+        F.explode(text.words("anchor_text")).alias("term"),
     ).where(F.col("dst_host") != "")
     out = terms.groupBy("dst_host", "term").agg(
         F.count("*").cast("long").alias("n")

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pdf_metadata_extraction_spark.operators import text
+
 # per-language stopword marker sets (n-gram heuristic; deterministic).
 # ASCII-only so lowercasing/replace semantics are identical across
 # engines; __spark_entry__ derives its DuckDB oracle from THIS dict, so
@@ -224,10 +226,7 @@ def detect_language_ngram(
         F.col(id_col).alias("id"),
         F.concat(
             F.lit(" "),
-            F.substring(
-                F.lower(F.regexp_replace(F.col(text_col), r"\s+", " ")),
-                1, prefix_chars,
-            ),
+            F.substring(text.fold(text_col), 1, prefix_chars),
             F.lit(" "),
         ).alias("_t"),
     )
@@ -327,7 +326,7 @@ def quality_score(df: DataFrame, id_col: str, text_col: str = "text") -> DataFra
     punct = F.length(F.regexp_replace(t, r"[A-Za-z0-9\s]", "")) / n
     spaces = F.length(t) - F.length(F.replace(t, F.lit(" "), F.lit("")))
     n_words = (spaces + 1).cast("double")
-    words = F.filter(F.split(F.lower(t), r"[^a-z0-9]+"), lambda w: w != "")
+    words = text.words(text_col)
     stop_hits = F.size(
         F.filter(words, lambda w: w.isin(list(_QUALITY_STOPWORDS)))
     )
@@ -387,10 +386,7 @@ def winnow_fingerprints(
     """
     norm = df.select(
         F.col(id_col).alias("id"),
-        F.substring(
-            F.lower(F.regexp_replace(F.col(text_col), r"\s+", " ")),
-            1, prefix_chars,
-        ).alias("_t"),
+        F.substring(text.fold(text_col), 1, prefix_chars).alias("_t"),
     )
     hashes = norm.select(
         "id",
@@ -460,8 +456,7 @@ def shared_span_pairs(
 def fingerprint(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     """Stable document fingerprint: md5 of the normalized text plus a
     64-bit prefix as a join-friendly integer."""
-    norm = F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
-    h = F.md5(norm)
+    h = F.md5(text.fold(text_col))
     return df.select(
         F.col(id_col).alias("id"),
         h.alias("fp_md5"),
@@ -491,9 +486,7 @@ def repetition_signals(
     """
     d = df.select(
         F.col(id_col).alias("id"),
-        F.expr(
-            f"filter(split(lower({text_col}), '[^a-z0-9]+'), x -> x != '')"
-        ).alias("_w"),
+        text.words(text_col).alias("_w"),
     ).withColumn(
         "_g2",
         F.when(
@@ -569,7 +562,7 @@ def quality_filter(
         + F.when(digits <= 0.2, 0.1).otherwise(0.0),
         6,
     )
-    words = F.filter(F.split(F.lower(t), r"[^a-z0-9]+"), lambda w: w != "")
+    words = text.words(text_col)
     total = F.size(words)
     dup = F.when(
         total > 0,

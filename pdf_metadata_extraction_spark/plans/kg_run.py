@@ -234,11 +234,12 @@ def run_kg_pipeline(
 
     def stage(
         name: str,
-        df: DataFrame,
+        df: DataFrame | Callable[[], DataFrame],
         partition_by: list[str] | None = None,
         gate: tuple[str, DataFrame] | None = None,
         channel: tuple[str, DataFrame] | None = None,
         out_rows: Callable[[DataFrame], int] | None = None,
+        schema: str | None = None,
     ) -> DataFrame:
         """Checkpoint one stage, its jobs described as ``kg_run:{name}``.
         A stage already on disk is read back: no job, no lineage row.
@@ -250,10 +251,17 @@ def run_kg_pipeline(
         input_rows. ``channel=(row, src)``: the stage derives a new
         table from ``src``; only the ``row`` row carries src's count.
         The row's output_rows is the stage's count, or
-        ``out_rows(frame)`` when given."""
+        ``out_rows(frame)`` when given.
+
+        ``df`` may instead be a function that builds the frame, for a
+        build that runs jobs of its own (PageRank iterations, connected
+        components rounds): it is called only when the stage is not on
+        disk, and ``schema`` is the schema the stage is read back with."""
         with _job_description(spark, f"kg_run:{name}"):
             if lw.committed(name):
-                return lw.read_stage(name, df)
+                return lw.read_stage(name, schema or df.schema)
+            if callable(df):
+                df = df()
             t = time.monotonic()
             row, src = gate or channel or (None, None)
             n_in = -1 if src is None else rows(src)
@@ -454,8 +462,10 @@ def run_kg_pipeline(
             "url", F.col("html").cast("string").alias("html_text")
         )
         host_edges = stage("host_edges", host_link_edges(pages_txt))
-        with _job_description(spark, "kg_run:host_ranks"):
-            ranks = pagerank_fixed(
+        out_extra["host_edges"] = host_edges
+        out_extra["host_ranks"] = stage(
+            "host_ranks",
+            lambda: pagerank_fixed(
                 host_edges.select(
                     F.col("src_host").alias("id_a"),
                     F.col("dst_host").alias("id_b"),
@@ -463,9 +473,9 @@ def run_kg_pipeline(
                 iters=3,
                 checkpoint_dir=lw.stage_path("host_rank_iters"),
                 lineage=lw,
-            )
-        out_extra["host_edges"] = host_edges
-        out_extra["host_ranks"] = stage("host_ranks", ranks)
+            ),
+            schema="node string, rank bigint",
+        )
 
     if frontier:
         if not link_graph:
@@ -647,15 +657,17 @@ def run_kg_pipeline(
     )
     # CC rounds checkpoint under the run's stage tree: a killed run
     # resumes mid-canonicalization (rounds are deterministic)
-    with _job_description(spark, "kg_run:nodes"):
-        nodes = canonicalize(
+    nodes = stage(
+        "nodes",
+        lambda: canonicalize(
             surface, "id", "text", lineage=lw,
             cc_checkpoint_dir=lw.stage_path("nodes_cc_rounds"),
         ).select(
             F.col("id").alias("node_id"),
             F.col("canonical_id"),
-        )
-    nodes = stage("nodes", nodes)
+        ),
+        schema="node_id string, canonical_id string",
+    )
 
     lw.record("pipeline_total", input_rows=-1, output_rows=rows(edges),
               wall_ms=int((time.monotonic() - t0) * 1000))

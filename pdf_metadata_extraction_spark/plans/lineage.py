@@ -25,6 +25,7 @@ import time
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from pdf_metadata_extraction_spark.operators import ckpt
 from pdf_metadata_extraction_spark.schemas import LINEAGE, arrow_schema
@@ -67,13 +68,13 @@ class LineageWriter:
         marker = os.path.join(self.stage_path(stage), "_SUCCESS")
         return ckpt.fs_exists(self.spark, marker)
 
-    def read_stage(self, stage: str, df: DataFrame) -> DataFrame:
+    def read_stage(self, stage: str, schema: StructType | str) -> DataFrame:
         # read back with the EXPLICIT schema: an empty stage output (a
         # legitimate result of aggressive gates — zero matches, all
         # pages dropped) writes no part files, and schema INFERENCE on
-        # such a dir throws UNABLE_TO_INFER_SCHEMA; the plan's schema
-        # is authoritative either way (and skipping inference is free)
-        return self.spark.read.schema(df.schema).parquet(self.stage_path(stage))
+        # such a dir throws UNABLE_TO_INFER_SCHEMA; the schema the code
+        # knows is authoritative either way (and skipping inference is free)
+        return self.spark.read.schema(schema).parquet(self.stage_path(stage))
 
     def write_stage(
         self,
@@ -92,7 +93,7 @@ class LineageWriter:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(self.stage_path(stage))
-        out = self.read_stage(stage, df)
+        out = self.read_stage(stage, df.schema)
         parts = []
         if partition_by:
             # per-partition lineage rows (north rule: any partition
@@ -140,7 +141,7 @@ class LineageWriter:
         tables instead of gzip JSON.
         """
         if self.committed(stage):
-            return self.read_stage(stage, df)
+            return self.read_stage(stage, df.schema)
         out, rows = self.write_stage(
             stage, df, partition_by, input_rows, partition_row_cap
         )

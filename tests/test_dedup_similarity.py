@@ -384,13 +384,13 @@ def test_incremental_exact_dedup(spark):
     classifies three ways (corpus_dup / batch_dup / novel with the
     min-id survivor), and updated_hashes is exactly corpus ∪ novel —
     the state the NEXT increment consumes."""
-    from pdf_metadata_extraction_spark.operators import dedup
+    from pdf_metadata_extraction_spark.operators import text
 
     corpus_docs = spark.createDataFrame(
         [(1, "alpha text"), (2, "beta text")], "doc_id long, text string"
     )
     corpus_hashes = corpus_docs.select(
-        F.md5(dedup.normalized_text("text")).alias("text_hash")
+        F.md5(text.fold("text")).alias("text_hash")
     )
     batch = spark.createDataFrame(
         [

@@ -578,11 +578,12 @@ def test_pagerank_iteration_telemetry(spark, tmp_path):
     assert stages == ["pr_iter_1", "pr_iter_2", "pr_iter_3"]
 
 
-def test_kg_run_link_graph_stage(spark, tmp_path):
+def test_kg_run_link_graph_stage(spark, tmp_path, monkeypatch):
     """Opt-in link-graph product inside the production runner: nav
     anchors become host self-edges, PageRank runs with per-iteration
     checkpoints under the run's stage tree + pr_iter lineage rows, and
-    a re-run with the same run_id reuses the finished stages."""
+    a re-run with the same run_id reuses the finished stages without
+    running PageRank or canonicalization again."""
     from pdf_metadata_extraction_spark.plans.kg_run import run_kg_pipeline
     from pdf_metadata_extraction_spark.sources.pages_synth import generate_pages
 
@@ -619,12 +620,25 @@ def test_kg_run_link_graph_stage(spark, tmp_path):
         "iter_1", "iter_2", "iter_3"
     ]
 
-    # resume: same run_id returns identical ranks
+    nodes = sorted(tuple(r) for r in out["nodes"].collect())
+    assert nodes
+
+    # resume: same run_id returns identical ranks and nodes, read from
+    # the committed stages — neither build runs again
+    from pdf_metadata_extraction_spark.operators import graph
+    from pdf_metadata_extraction_spark.plans import kg_run
+
+    def must_not_run(*args, **kwargs):
+        raise AssertionError("a committed stage was rebuilt")
+
+    monkeypatch.setattr(graph, "pagerank_fixed", must_not_run)
+    monkeypatch.setattr(kg_run, "canonicalize", must_not_run)
     again = run_kg_pipeline(
         spark, pages, opts, str(tmp_path / "w"), run_id="lg",
         link_graph=True,
     )
     assert {r["node"]: r["rank"] for r in again["host_ranks"].collect()} == ranks
+    assert sorted(tuple(r) for r in again["nodes"].collect()) == nodes
 
 
 def test_kg_run_fusion_stage(spark, tmp_path):
