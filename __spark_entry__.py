@@ -61,6 +61,7 @@ def _fuzzy_sql_pattern(label: str) -> str:
 # the word tokenizer and the whitespace fold: the operators' Spark
 # spelling and, for the oracles, the DuckDB one
 from pdf_metadata_extraction_spark.operators import text  # noqa: E402
+from pdf_metadata_extraction_spark.schemas import local_frame  # noqa: E402
 
 # language-ID oracle derives from the OPERATOR's marker dict — single
 # source of truth, the two engines cannot drift
@@ -173,7 +174,7 @@ def _scratch_dir(prefix: str) -> str:
 
 def _entity_labels(spark: SparkSession) -> DataFrame:
     """``_ENTITY_LABELS`` as a one-column ``label`` frame."""
-    return spark.createDataFrame([(l,) for l in _ENTITY_LABELS], "label string")
+    return local_frame(spark, [(l,) for l in _ENTITY_LABELS], "label string")
 
 
 def _label_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -277,7 +278,8 @@ def entry(spark: SparkSession) -> DataFrame:
     segs = segments_from_pages(pages).withColumn(
         "extraction_name", F.lit("mentions")
     )
-    options = spark.createDataFrame(
+    options = local_frame(
+        spark,
         [("mentions", lab, lab, True) for lab in FLAGSHIP_LABELS],
         "extraction_name string, option_id string, label string, multi_value boolean",
     )
@@ -450,7 +452,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         d = _t(spark, sf_dir, "documents").select(
             "doc_id", "text", F.lit("fz").alias("extraction_name")
         )
-        options = spark.createDataFrame(
+        options = local_frame(
+            spark,
             [("fz", lab, lab, True) for lab in _FUZZY_LABELS],
             "extraction_name string, option_id string, label string, multi_value boolean",
         )
@@ -1793,7 +1796,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         pages = docs.mapInPandas(
             to_pages, schema="url string, html_text string"
         )
-        robots = spark.createDataFrame(
+        robots = local_frame(
+            spark,
             [
                 (
                     "h%d.example" % k,
@@ -1808,7 +1812,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ],
             "host string, body string",
         )
-        ranks = spark.createDataFrame(
+        ranks = local_frame(
+            spark,
             [("h%d.example" % k, (k * 13) % 17 + 1) for k in range(20)],
             "host string, rank long",
         )

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdf_metadata_extraction_spark.schemas import local_frame
+
 
 def undirected_edges(edges: DataFrame) -> DataFrame:
     """Canonical undirected edge set: (a < b), self-loops dropped,
@@ -330,9 +332,7 @@ def triangle_count(edges: DataFrame, materialize: bool = True) -> DataFrame:
         jrdd = jmap.get(rid)
         if jrdd is not None:
             jrdd.unpersist()
-    return edges.sparkSession.createDataFrame(
-        [(n,)], "n_triangles long"
-    )
+    return local_frame(edges.sparkSession, [(n,)], "n_triangles long")
 
 
 def _ckpt_rdd_id(df: DataFrame) -> int:
@@ -538,8 +538,8 @@ def pagerank_fixed(
         # fresh empty DataFrame (NOT derived from nodes) so the helper
         # caches can be released before returning — the early return
         # must not leak nodes/outdeg persists (round-4 ADVICE).
-        out = spark.createDataFrame(
-            [], nodes.withColumn("rank", F.lit(0).cast("long")).schema
+        out = local_frame(
+            spark, [], nodes.withColumn("rank", F.lit(0).cast("long")).schema
         )
         if checkpoint_dir:
             nodes.unpersist()
@@ -819,7 +819,7 @@ def hits_integer(
             jrdd.unpersist()
     # schema lifted from the lazy plan: node keeps the caller's id
     # type (long doc ids, string hosts — both occur in this repo)
-    return spark.createDataFrame(rows, result.schema)
+    return local_frame(spark, rows, result.schema)
 
 
 def coreness(
@@ -984,7 +984,7 @@ def k_hop_reachable(
         ).limit(top_k).collect()
         schema = visited.schema
         _release_ckpts(spark, pinned)
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
     result = visited.localCheckpoint(eager=True)
     _release_ckpts(spark, pinned)
     return result
@@ -1073,5 +1073,5 @@ def bounded_shortest_paths(
         ).limit(top_k).collect()
         schema = dist.schema
         _release_ckpts(spark, [dist])
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
     return dist

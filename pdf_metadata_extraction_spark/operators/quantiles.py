@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdf_metadata_extraction_spark.schemas import local_frame
+
 
 def exact_quantiles(
     df: DataFrame,
@@ -51,8 +53,8 @@ def exact_quantiles(
     )
     n = vals.count()
     if n == 0:
-        return vals.sparkSession.createDataFrame(
-            [], "q_ppm long, value long, n long"
+        return local_frame(
+            vals.sparkSession, [], "q_ppm long, value long, n long"
         )
     import math
 
@@ -60,8 +62,10 @@ def exact_quantiles(
         (int(round(q * 1_000_000)), max(1, math.ceil(q * n))) for q in qs
     ]
     t_df = F.broadcast(
-        vals.sparkSession.createDataFrame(
-            [(int(p), int(r)) for p, r in targets], "q_ppm long, _tr long"
+        local_frame(
+            vals.sparkSession,
+            [(int(p), int(r)) for p, r in targets],
+            "q_ppm long, _tr long",
         )
     )
     ranked = global_rank(vals, ["value", "_id"], num_ranges=num_ranges)

@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pdf_metadata_extraction_spark.operators import text
+from pdf_metadata_extraction_spark.schemas import local_frame
 
 # per-language stopword marker sets (n-gram heuristic; deterministic).
 # ASCII-only so lowercasing/replace semantics are identical across
@@ -218,9 +219,10 @@ def detect_language_ngram(
     the (id, lang) groupBy is a uniform-key shuffle with map-side
     partial sums — the 100 TB shape.
     """
-    spark = df.sparkSession
-    wdf = spark.createDataFrame(
-        trigram_weight_rows(), "tri string, lang string, wt long, lang_rank int"
+    wdf = local_frame(
+        df.sparkSession,
+        trigram_weight_rows(),
+        "tri string, lang string, wt long, lang_rank int",
     )
     norm = df.select(
         F.col(id_col).alias("id"),

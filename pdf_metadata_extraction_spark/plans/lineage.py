@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from pdf_metadata_extraction_spark.operators import ckpt
-from pdf_metadata_extraction_spark.schemas import LINEAGE, arrow_schema
+from pdf_metadata_extraction_spark.schemas import LINEAGE, local_frame
 
 
 class LineageWriter:
@@ -45,18 +45,12 @@ class LineageWriter:
     def append(self, rows: list[tuple]) -> None:
         """Append ``(stage, partition_range, salt, input_rows,
         output_rows, wall_ms)`` rows as one parquet file. The frame is
-        an Arrow table, so its plan is a LocalTableScan: the append is
-        the write's one job, with no python stage."""
-        import pyarrow as pa
-
+        a ``local_frame``, so its plan is a LocalTableScan: the append
+        is the write's one job, with no python stage."""
         now = datetime.now(timezone.utc)
-        table = pa.Table.from_pylist(
-            [dict(zip(LINEAGE.fieldNames(), (self.run_id, *r, now))) for r in rows],
-            schema=arrow_schema(self.spark, LINEAGE),
-        )
-        self.spark.createDataFrame(table, LINEAGE).coalesce(1).write.mode(
-            "append"
-        ).parquet(self.lineage_path)
+        local_frame(
+            self.spark, [(self.run_id, *r, now) for r in rows], LINEAGE
+        ).coalesce(1).write.mode("append").parquet(self.lineage_path)
 
     def stage_path(self, stage: str) -> str:
         return os.path.join(self.root, "stages", self.run_id, stage)

@@ -55,7 +55,7 @@ from pdf_metadata_extraction_spark.operators.selector import (
     train_selector,
 )
 from pdf_metadata_extraction_spark.operators.triples import finalize_triples
-from pdf_metadata_extraction_spark.schemas import SEGMENTS, arrow_schema
+from pdf_metadata_extraction_spark.schemas import SEGMENTS, arrow_schema, local_frame
 
 
 @dataclass
@@ -356,7 +356,8 @@ def predict_extraction(
 
 
 def _options_df(spark: SparkSession, model: ExtractionModel) -> DataFrame:
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (model.extraction_name, oid, label, model.multi_value)
             for oid, label in model.options

@@ -174,3 +174,23 @@ def arrow_schema(spark, schema: T.StructType):
 
     large = spark.conf.get("spark.sql.execution.arrow.useLargeVarTypes") == "true"
     return to_arrow_schema(schema, prefers_large_types=large)
+
+
+def local_frame(spark, rows, schema: T.StructType | str):
+    """A DataFrame of rows the driver already holds (tuples or ``Row``s
+    in ``schema``'s column order). They reach ``createDataFrame`` as a
+    ``pyarrow.Table``, so the plan is a ``LocalTableScan`` and no action
+    on the frame runs a job for them; a python list would plan a
+    ``Scan ExistingRDD`` over pickled rows, whose first action runs a
+    PythonRDD job with one task per core. Timestamps are instants and
+    come back in the session time zone. Every engine-built frame of
+    driver-held rows goes through here."""
+    import pyarrow as pa
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    names = schema.fieldNames()
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=arrow_schema(spark, schema)
+    )
+    return spark.createDataFrame(table, schema)

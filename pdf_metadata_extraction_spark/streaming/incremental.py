@@ -110,7 +110,7 @@ def compact_registers(
     fs, jroot = ckpt.fs_for(spark, reg_dir)
     if not fs.exists(jroot):
         return
-    Path = spark._jvm.org.apache.hadoop.fs.Path
+    Path = getattr(spark._jvm, "org.apache.hadoop.fs.Path")  # one py4j lookup
     tmp = f"{reg_dir}/_compact_tmp_{upto_batch}"
     jtmp = Path(tmp)
     target = Path(f"{reg_dir}/batch_id={upto_batch - 1}")

@@ -4,7 +4,9 @@ every task, must not re-parse an unchanged zip archive, and must still
 pick up a rewritten one), the frozen heap the workers inherit, the
 local-only daemon default, the default core count, and the one python
 worker pool a session starts on first use (one daemon for RDD and SQL
-python stages, none at build) whose Arrow UDF errors stay short."""
+python stages, none at build) whose Arrow UDF errors stay short, and
+that driver-held rows (a collected ``local_frame``, a lineage append)
+start no python process at all."""
 
 from __future__ import annotations
 
@@ -115,18 +117,11 @@ def test_daemon_default_only_on_local_master(monkeypatch):
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# A fresh session's python processes, read at three points: right after
-# get_spark(), after one mapInArrow, and after an RDD-runner job (the
-# collect of a createDataFrame(list) frame) plus the flagship's
-# link_options over segments_from_pages. A daemon is a daemon_preload
+# A fresh session's python processes. A daemon is a daemon_preload
 # process whose parent is the JVM; its workers are its children.
-_POOL_CHILD = """
+_POOL_PROBE = """
 import json, os
-from pdf_metadata_extraction_spark.operators.linking import link_options
-from pdf_metadata_extraction_spark.plans.pipeline import segments_from_pages
 from pdf_metadata_extraction_spark.session import get_spark
-from pdf_metadata_extraction_spark.sources.pages_synth import row_for_doc
-from pyspark.sql import functions as F
 
 def children():
     kids = {}
@@ -154,6 +149,17 @@ def pool():
     return {"jvm": len(jvm), "python_children": len(under_jvm),
             "daemons": len(daemons),
             "workers": sum(len(kids.get(d, [])) for d in daemons)}
+"""
+
+# the pool read at three points: right after get_spark(), after one
+# mapInArrow, and after an RDD-runner job (the collect of a
+# createDataFrame(list) frame) plus the flagship's link_options over
+# segments_from_pages
+_POOL_CHILD = _POOL_PROBE + """
+from pdf_metadata_extraction_spark.operators.linking import link_options
+from pdf_metadata_extraction_spark.plans.pipeline import segments_from_pages
+from pdf_metadata_extraction_spark.sources.pages_synth import row_for_doc
+from pyspark.sql import functions as F
 
 spark = get_spark(app_name="pool", master="local[2]", shuffle_partitions=2)
 seen = {"build": pool()}
@@ -191,6 +197,36 @@ def test_python_pool_starts_on_first_python_stage(pool_counts):
 
 def test_rdd_and_sql_python_stages_share_one_daemon(pool_counts):
     assert pool_counts["link_options"]["daemons"] == 1, pool_counts
+
+
+# the pool after collecting a local_frame of flagship options and one
+# lineage append: driver-held rows, so no python process should start
+_LOCAL_FRAME_CHILD = _POOL_PROBE + """
+import sys
+from pdf_metadata_extraction_spark.plans.lineage import LineageWriter
+from pdf_metadata_extraction_spark.schemas import local_frame
+
+spark = get_spark(app_name="local_frame", master="local[2]", shuffle_partitions=2)
+local_frame(spark, [("mentions", "spark", "spark", True)],
+    "extraction_name string, option_id string, label string, multi_value boolean",
+).collect()
+LineageWriter(spark, sys.argv[1], "run").record("stage", 3, 2, 5)
+rows = spark.read.parquet(sys.argv[1] + "/lineage").count()
+print(json.dumps({"pool": pool(), "lineage_rows": rows}))
+spark.stop()
+"""
+
+
+def test_local_frame_and_lineage_append_start_no_python_worker(tmp_path):
+    out = subprocess.run(
+        [sys.executable, "-c", _LOCAL_FRAME_CHILD, str(tmp_path)], cwd=ROOT,
+        env=dict(os.environ), capture_output=True, text=True, timeout=300,
+        check=True,
+    ).stdout
+    got = json.loads(out.strip().splitlines()[-1])
+    assert got["lineage_rows"] == 1, got
+    assert got["pool"]["jvm"] == 1, got
+    assert got["pool"]["python_children"] == 0, got
 
 
 def test_arrow_udf_error_names_user_exception_without_worker_frames(spark):
