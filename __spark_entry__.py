@@ -86,8 +86,11 @@ def _t(
     the session's parallelism, at the cost of one more shuffle stage
     and its generated code. The condition is layout-derived: an input
     that already yields at least parallelism/4 scan tasks (every
-    real-scale table) is left alone. Other queries read the table as
-    laid out.
+    real-scale table) is left alone. The scan-task count of a file is
+    worked out from its length (``_scan_splits``), not by planning the
+    read (``df.rdd.getNumPartitions()`` cost 60–86 ms per read against
+    18–22 ms for the read alone). Other queries read the table as laid
+    out.
 
     An entry opts in only where an interleaved ``bench_extra.py`` A/B
     (spread vs none, sf0.1, 4 cores) showed a wall win beyond the
@@ -107,36 +110,58 @@ def _t(
     file's modification time and length, so a file rewritten at the
     same path is inferred again.
     """
-    df = _read_table(spark, f"{sf_dir}/{name}.parquet")
+    df, length = _read_table(spark, f"{sf_dir}/{name}.parquet")
     if spread:
         par = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() * 4 <= par:
+        splits = (
+            df.rdd.getNumPartitions() if length is None
+            else _scan_splits(spark, length)
+        )
+        if splits * 4 <= par:
             df = df.repartition(par)
     return df
+
+
+def _scan_splits(spark: SparkSession, length: int) -> int:
+    """The scan tasks Spark plans for one splittable file of ``length``
+    bytes (``FilePartition.maxSplitBytes``): splits of
+    ``min(maxPartitionBytes, max(openCostInBytes, bytesPerCore))``,
+    where ``bytesPerCore`` spreads the length plus one open cost over
+    ``minPartitionNum`` (else the leaf-node parallelism). Each split of
+    a lone file packs into a task of its own."""
+    conf = spark._jsparkSession.sessionState().conf()
+    max_bytes, open_cost = conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes()
+    cores = int(
+        spark.conf.get("spark.sql.files.minPartitionNum", None)
+        or spark.conf.get("spark.sql.leafNodeDefaultParallelism", None)
+        or spark.sparkContext.defaultParallelism
+    )
+    split = min(max_bytes, max(open_cost, (length + open_cost) // cores))
+    return -(-length // split)
 
 
 # session -> {path: ((modification time, length), schema Spark inferred)}
 _SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
-def _read_table(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)``, inferring the schema of a file only
-    the first time this session reads it (see ``_t``). A directory is
-    inferred on every read: its status does not say whether the files
-    under it changed."""
+def _read_table(spark: SparkSession, path: str) -> tuple[DataFrame, int | None]:
+    """``spark.read.parquet(path)`` and the file's length (None for a
+    directory), inferring the schema of a file only the first time this
+    session reads it (see ``_t``). A directory is inferred on every
+    read: its status does not say whether the files under it changed."""
     from pdf_metadata_extraction_spark.operators.ckpt import fs_for
 
     fs, p = fs_for(spark, path)
     st = fs.getFileStatus(p)
     if st.isDirectory():
-        return spark.read.parquet(path)
+        return spark.read.parquet(path), None
     stamp = (st.getModificationTime(), st.getLen())
     seen = _SCHEMAS.setdefault(spark, {})
     if path in seen and seen[path][0] == stamp:
-        return spark.read.schema(seen[path][1]).parquet(path)
+        return spark.read.schema(seen[path][1]).parquet(path), stamp[1]
     df = spark.read.parquet(path)
     seen[path] = (stamp, df.schema)
-    return df
+    return df, stamp[1]
 
 
 _SCRATCH_ROOT: list[str] = []  # lazily-created, removed at process exit
@@ -5147,9 +5172,8 @@ WHERE pick_rank <= 20
 """
     # ---- round-5 corpus-hygiene family ----
     # shared tokenisation (identical to repetition_signals) and the
-    # same 1-based gram indexing as decontam.word_ngram_col: DuckDB
-    # range(1, len-n+2) == Spark sequence(1, size-n+1); w[i:i+n-1]
-    # (1-based inclusive) == slice(w, i, n)
+    # same grams as text.word_ngrams: DuckDB range(1, len-n+2) with
+    # w[i:i+n-1] (1-based inclusive) walks the n-word runs in order
     _EV_SQL = (
         "CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)),1,15)) AS BIGINT)"
         " % 20 = 0"

@@ -20,6 +20,9 @@ Next to each wall sample it reports the layers an A/B needs to name:
 the seconds the python build of the DataFrame took (`build_s`), the
 py4j commands the driver sent the JVM during the sample (`py4j`, build
 and action, counted at py4j's `GatewayClient.send_command`), the
+higher-order-function lambdas in the query's executed plan (`lambdas`,
+the count of `lambdafunction`: each runs interpreted, once per array
+element), the
 process tree's CPU seconds (driver, JVM less its JIT compiler
 threads, python workers; `perfbench.run.tree_usage`), the number of
 classes Janino compiled (Spark's `CodegenMetrics`), the number of
@@ -123,8 +126,9 @@ def main() -> None:
         if args.explain_only:
             continue
 
-        def action() -> float:
-            """Build and run the query; returns the build's seconds."""
+        def action():
+            """Build and run the query; returns the build's seconds and
+            the frame."""
             t = time.monotonic()
             df = fn(spark, SF_DIR)
             built = time.monotonic() - t
@@ -132,12 +136,13 @@ def main() -> None:
                 df.write.format("noop").mode("overwrite").save()
             else:
                 df.count()
-            return built
+            return built, df
 
         action()  # warmup, untimed (bench.py methodology)
         samples, build, py4j, cpu, compiles, jobs, py_procs, py_rss = (
             [], [], [], [], [], [], [], []
         )
+        lambdas = []
         for i in range(args.repeats):
             group = f"bench_extra:{name}:{i}"
             sc.setJobGroup(group, f"bench_extra:{name}")
@@ -145,7 +150,8 @@ def main() -> None:
             n0 = compilations.getCount()
             s0 = sent[0]
             t0 = time.monotonic()
-            build.append(round(action(), 3))
+            built, df = action()
+            build.append(round(built, 3))
             samples.append(round(time.monotonic() - t0, 3))
             py4j.append(sent[0] - s0)
             compiles.append(compilations.getCount() - n0)
@@ -158,12 +164,18 @@ def main() -> None:
             # before counting the group's jobs
             sc._jsc.sc().listenerBus().waitUntilEmpty()
             jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            # planned after the sample is read, so it costs the sample
+            # nothing
+            lambdas.append(
+                df._jdf.queryExecution().executedPlan().toString()
+                .count("lambdafunction")
+            )
         out[name] = {"min": min(samples), "samples": samples,
-                     "build_s": build, "py4j": py4j,
+                     "build_s": build, "py4j": py4j, "lambdas": lambdas,
                      "cpu_s": cpu, "compiles": compiles, "jobs": jobs,
                      "py_procs": py_procs, "py_rss_mb": py_rss}
         print(f"{name}: min={min(samples)} samples={samples} build_s={build} "
-              f"py4j={py4j} cpu_s={cpu} compiles={compiles} jobs={jobs} "
+              f"py4j={py4j} lambdas={lambdas} cpu_s={cpu} compiles={compiles} jobs={jobs} "
               f"py_procs={py_procs} py_rss_mb={py_rss}", file=sys.stderr)
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setJobDescription(None)

@@ -41,7 +41,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pdf_metadata_extraction_spark.operators import text
-from pdf_metadata_extraction_spark.operators.decontam import word_ngram_col
 
 
 def _doc_grams(
@@ -52,7 +51,7 @@ def _doc_grams(
         F.col(id_col).alias("id"),
         F.col(group_col).alias("grp"),
         text.words(text_col).alias("_w"),
-    ).select("id", "grp", word_ngram_col("_w", n).alias("_g"))
+    ).select("id", "grp", text.word_ngrams("_w", n).alias("_g"))
 
 
 def boilerplate_ngrams(

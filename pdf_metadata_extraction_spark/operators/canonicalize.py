@@ -45,14 +45,7 @@ def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame
         text.fold(text_col).alias("_t"),
     ).select(
         "id",
-        F.explode_outer(
-            F.array_distinct(
-                F.expr(
-                    f"transform(sequence(1, greatest(length(_t) - {n - 1}, 1)),"
-                    f" i -> substr(_t, i, {n}))"
-                )
-            )
-        ).alias("shingle"),
+        F.explode_outer(F.array_distinct(text.shingles("_t", n))).alias("shingle"),
     )
 
 

@@ -213,29 +213,21 @@ def tfidf_top_terms(
     )
 
 
-# Per-doc bigram array: struct(w1, w2) for consecutive token pairs.
-# sequence(1, n) DESCENDS when n == 0 (Spark quirk) — the size guard
-# keeps sub-2-token docs at an empty array instead of a bogus pair.
-_BIGRAMS = (
-    "CASE WHEN size({toks}) < 2 THEN array() "
-    "ELSE transform(sequence(1, size({toks}) - 1), "
-    "i -> struct({toks}[i-1] AS w1, {toks}[i] AS w2)) END"
-)
-
-
 def _doc_bigram_tf(
     df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """(id, w1, w2, tf) — per-document bigram frequency, rolled up
     BEFORE any model join (the same skew-compression discipline as
-    ``_doc_tf``: a doc contributes 'of the' once, not 400 times)."""
-    toks = text.WORDS.format(t=text_col)
+    ``_doc_tf``: a doc contributes 'of the' once, not 400 times). A
+    bigram is a word 2-gram split at its one space."""
     return (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.explode(F.expr(_BIGRAMS.format(toks=toks))).alias("b"),
+        df.select(F.col(id_col).alias("id"), text.words(text_col).alias("_w"))
+        .select("id", F.explode(text.word_ngrams("_w", 2)).alias("g"))
+        .select(
+            "id",
+            F.substring_index("g", " ", 1).alias("w1"),
+            F.substring_index("g", " ", -1).alias("w2"),
         )
-        .select("id", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
         .groupBy("id", "w1", "w2")
         .agg(F.count("*").cast("long").alias("tf"))
     )

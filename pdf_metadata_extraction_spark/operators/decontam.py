@@ -24,8 +24,9 @@ Scale design (the 100x lens):
   corpus side remains MAP-ONLY: no shuffle touches the 100 TB side
   until the final per-doc aggregation, which is a groupBy on the
   corpus's own primary key with map-side partial aggregation.
-- n-gram assembly is pure array expressions (split / sequence / slice /
-  array_join): whole-stage codegen, zero Python.
+- n-gram assembly is the text layer's word n-gram (``text.word_ngrams``,
+  one regex over the joined words): generated code, no lambda, zero
+  Python.
 - The per-doc result is one narrow row per input doc (id + 3 ints) —
   re-joinable to the corpus by key without carrying text.
 
@@ -44,25 +45,6 @@ from pyspark.sql import functions as F
 from pdf_metadata_extraction_spark.operators import text
 
 
-def word_ngram_col(words_col: str, n: int):
-    """Order-preserving word n-grams as an array<string> column.
-
-    1-based ``sequence(1, size-n+1)`` + ``slice(w, i, n)`` — the same
-    index discipline as the DuckDB mirror (``range(1, len-n+2)`` +
-    1-based inclusive list slicing), so both engines emit identical
-    gram strings.  Guarded for short docs: Spark's ``sequence(1, k)``
-    DESCENDS when k <= 0, so docs with fewer than ``n`` words get an
-    explicit empty array.
-    """
-    return F.when(
-        F.size(words_col) >= n,
-        F.expr(
-            f"transform(sequence(1, size({words_col}) - {n - 1}),"
-            f" i -> array_join(slice({words_col}, i, {n}), ' '))"
-        ),
-    ).otherwise(F.expr("array()"))
-
-
 def _tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return df.select(
         F.col(id_col).alias("id"),
@@ -78,7 +60,7 @@ def eval_ngram_set(
     contamination join."""
     return (
         _tokens(eval_df, id_col, text_col)
-        .select(F.explode(word_ngram_col("_w", n)).alias("gram"))
+        .select(F.explode(text.word_ngrams("_w", n)).alias("gram"))
         .distinct()
     )
 
@@ -112,7 +94,7 @@ def scrub_contaminated_spans(
     ).select("id", (F.col("pos0") + 1).alias("pos"), "word")
     grams = (
         _tokens(corpus, id_col, text_col)
-        .select("id", F.posexplode(word_ngram_col("_w", n)).alias("gpos0", "gram"))
+        .select("id", F.posexplode(text.word_ngrams("_w", n)).alias("gpos0", "gram"))
         .select("id", (F.col("gpos0") + 1).alias("start"), "gram")
     )
     ev = F.broadcast(eval_ngram_set(eval_df, id_col, text_col, n))
@@ -181,7 +163,7 @@ def contamination(
     """
     grams = (
         _tokens(corpus, id_col, text_col)
-        .select("id", F.explode_outer(word_ngram_col("_w", n)).alias("gram"))
+        .select("id", F.explode_outer(text.word_ngrams("_w", n)).alias("gram"))
     )
     ev = F.broadcast(eval_ngram_set(eval_df, id_col, text_col, n))
     hit = (

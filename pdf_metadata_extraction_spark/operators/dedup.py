@@ -245,14 +245,7 @@ def char_ngrams(df: DataFrame, id_col: str, text_col: str = "text", n: int = 3,
         F.substring(text.fold(text_col), 1, prefix_chars).alias("_t"),
     ).select(
         "id",
-        F.explode(
-            F.array_distinct(
-                F.expr(
-                    f"transform(sequence(1, greatest(length(_t) - {n - 1}, 1)),"
-                    f" i -> substr(_t, i, {n}))"
-                )
-            )
-        ).alias("gram"),
+        F.explode(F.array_distinct(text.shingles("_t", n))).alias("gram"),
     )
 
 

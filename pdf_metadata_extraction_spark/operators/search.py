@@ -3,8 +3,10 @@ mandate: query capabilities for a training-data corpus; retrieval is
 how humans audit what dedup/quality filters kept).
 
 Design for cross-engine exactness (the driver value-hash gate):
-- per-term tf and per-doc length are PURE array expressions (no
-  explode, no groupBy) — whole-stage codegen, one corpus scan;
+- per-term tf and per-doc length are PURE array expressions over one
+  tokenization per document (no explode, no groupBy, no lambda): tf is
+  ``size(w) - size(array_remove(w, term))`` — generated code, one
+  corpus scan;
 - corpus stats (N, Σdl, per-term df) are INTEGER aggregates — exact
   under any aggregation order — broadcast back via one cross join;
 - the score is a FIXED-ORDER (query-term-order) left-associated sum of
@@ -36,10 +38,9 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
-def _eq(term: str):
-    # single-arg lambda factory: a `lambda w, t=t:` closure has TWO
-    # parameters, which F.filter interprets as (element, index)
-    return lambda w: w == term
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _score_and_topk(
@@ -52,37 +53,43 @@ def _score_and_topk(
     postings-index) → bit-exact doubles, no rank flips. A tf of 0
     contributes exactly +0.0, which is an IEEE identity, so the scan
     path (all terms materialized) and the index path (absent terms
-    filled with 0) produce the SAME float."""
-    stats = base.agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("sum_dl"),
+    filled with 0) produce the SAME float.
+
+    Built as SQL text: one py4j command per projection instead of one
+    per Column operator. Literals carry the ``D`` suffix, so each is a
+    double, as it was in the Column build (a bare ``0.5`` is a decimal
+    in Spark SQL)."""
+    stats = base.selectExpr(
+        "count(*) AS n_docs",
+        "cast(sum(dl) AS long) AS sum_dl",
         *[
-            F.sum((F.col(f"tf_{i}") > 0).cast("long")).cast("long").alias(f"df_{i}")
+            f"cast(sum(cast(tf_{i} > 0 AS long)) AS long) AS df_{i}"
             for i in range(n_terms)
         ],
     )
-    joined = base.crossJoin(F.broadcast(stats))
-    avgdl = F.col("sum_dl").cast("double") / F.col("n_docs")
-    score = F.lit(0.0)
+    avgdl = "(cast(sum_dl AS double) / n_docs)"
+    contribs = []
     for i in range(n_terms):
-        tf = F.col(f"tf_{i}").cast("double")
-        df = F.col(f"df_{i}").cast("double")
-        idf = F.round(
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs").cast("double") - df + F.lit(0.5))
-                / (df + F.lit(0.5))
-            ),
-            6,
+        tf = f"cast(tf_{i} AS double)"
+        df = f"cast(df_{i} AS double)"
+        idf = (
+            f"round(ln(1.0D + (cast(n_docs AS double) - {df} + 0.5D)"
+            f" / ({df} + 0.5D)), 6)"
         )
-        contrib = idf * (
-            (tf * F.lit(k1 + 1.0))
-            / (tf + F.lit(k1) * (F.lit(1.0) - F.lit(b) + F.lit(b) * (F.col("dl").cast("double") / avgdl)))
+        contribs.append(
+            f"({idf} * (({tf} * {k1 + 1.0!r}D) / ({tf} + {k1!r}D * (1.0D - {b!r}D"
+            f" + {b!r}D * (cast(dl AS double) / {avgdl})))))"
         )
-        score = score + contrib
+    score = " + ".join(["0.0D", *contribs])
+    # coalesce(_s, 0) > 0 keeps the rows _s > 0 keeps. It is written so
+    # because Catalyst infers isnotnull(tf_i) and isnotnull(dl) from a
+    # null-intolerant _s > 0 and pushes them through the projections,
+    # below any spread of the scan, into the scan task: every term
+    # count evaluated twice there, on one core.
     hits = (
-        joined.select("id", score.alias("_s"))
-        .where(F.col("_s") > 0)
+        base.crossJoin(F.broadcast(stats))
+        .selectExpr("id", f"{score} AS _s")
+        .where("coalesce(_s, 0.0D) > 0.0D")
         .orderBy(F.desc("_s"), F.asc("id"))
         .limit(topk)
     )
@@ -117,13 +124,13 @@ def bm25_rank(
     downstream of the rounding is IEEE-exact.
     """
     terms = list(query_terms)
-    base = docs.select(
-        F.col(id_col).alias("id"), text.words(text_col).alias("_w")
-    ).select(
+    base = docs.selectExpr(
+        f"{id_col} AS id", f"{text.WORDS.format(t=text_col)} AS _w"
+    ).selectExpr(
         "id",
-        F.size("_w").alias("dl"),
+        "size(_w) AS dl",
         *[
-            F.size(F.filter(F.col("_w"), _eq(t))).alias(f"tf_{i}")
+            f"size(_w) - size(array_remove(_w, {_sql_str(t)})) AS tf_{i}"
             for i, t in enumerate(terms)
         ],
     )

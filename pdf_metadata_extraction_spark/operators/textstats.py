@@ -232,15 +232,7 @@ def detect_language_ngram(
             F.lit(" "),
         ).alias("_t"),
     )
-    tris = norm.select(
-        "id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, greatest(length(_t) - 2, 1)),"
-                " i -> substr(_t, i, 3))"
-            )
-        ).alias("tri"),
-    )
+    tris = norm.select("id", F.explode(text.shingles("_t", 3)).alias("tri"))
     scored = (
         tris.join(F.broadcast(wdf), "tri")
         .groupBy("id", "lang", "lang_rank")
@@ -393,9 +385,8 @@ def winnow_fingerprints(
     hashes = norm.select(
         "id",
         F.expr(
-            f"transform(sequence(1, greatest(length(_t) - {k - 1}, 1)),"
-            f" i -> cast(conv(substr(md5(substr(_t, i, {k})), 1, 15), 16, 10)"
-            f" as bigint))"
+            f"transform({text.SHINGLES.format(t='_t', n=k)},"
+            " s -> cast(conv(substr(md5(s), 1, 15), 16, 10) as bigint))"
         ).alias("hs"),
     )
     return hashes.select(
@@ -479,35 +470,19 @@ def repetition_signals(
     al. 2021, §A1.1 — the in-doc analogue of the corpus-level dedup
     family in dedup.py).
 
-    Pure array expressions (filter/transform/array_distinct): map-only,
-    zero shuffle, whole-stage codegen, exactly mirrored in the DuckDB
-    oracle. n-gram assembly uses 1-based element_at on BOTH engines
-    (Spark ``[]`` is 0-based, DuckDB 1-based — element_at agrees).
-    Fractions are round(1.0 − distinct/total, 6) with identical
+    Pure array expressions (the text layer's words and word n-grams,
+    array_distinct): map-only, zero shuffle, whole-stage codegen, no
+    lambda; the DuckDB oracle builds the same grams with 1-based
+    element_at. Fractions are round(1.0 − distinct/total, 6) with identical
     parenthesization cross-engine; empty/short docs score 0.0.
     """
     d = df.select(
         F.col(id_col).alias("id"),
         text.words(text_col).alias("_w"),
-    ).withColumn(
-        "_g2",
-        F.when(
-            F.size("_w") >= 2,
-            F.expr(
-                "transform(sequence(1, size(_w) - 1),"
-                " i -> concat(element_at(_w, i), ' ', element_at(_w, i + 1)))"
-            ),
-        ).otherwise(F.array().cast("array<string>")),
-    ).withColumn(
-        "_g3",
-        F.when(
-            F.size("_w") >= 3,
-            F.expr(
-                "transform(sequence(1, size(_w) - 2),"
-                " i -> concat(element_at(_w, i), ' ', element_at(_w, i + 1),"
-                " ' ', element_at(_w, i + 2)))"
-            ),
-        ).otherwise(F.array().cast("array<string>")),
+    ).select(
+        "id", "_w",
+        text.word_ngrams("_w", 2).alias("_g2"),
+        text.word_ngrams("_w", 3).alias("_g3"),
     )
 
     def frac(arr: str) -> Column:

@@ -54,20 +54,19 @@ def triples_to_edges(triples: DataFrame) -> DataFrame:
     """
     # single pass: unify the two obj sources into one array, then explode —
     # a union here would recompute the whole upstream pipeline twice.
+    # the values' (id, segment_text) pairs zipped and cast by position,
+    # not a transform lambda: generated code instead of an interpreted
+    # call per value
+    obj_t = "array<struct<obj:string,segment_text:string>>"
     has_values = F.coalesce(F.size("values"), F.lit(0)) > 0
-    obj_struct = lambda obj, seg: F.struct(  # noqa: E731
-        obj.alias("obj"), seg.alias("segment_text")
-    )
     objs = F.when(
         has_values,
-        F.transform(
-            F.col("values"), lambda v: obj_struct(v["id"], v["segment_text"])
-        ),
+        F.arrays_zip("values.id", "values.segment_text").cast(obj_t),
     ).otherwise(
         F.when(
             F.col("text").isNotNull() & (F.col("text") != ""),
-            F.array(obj_struct(F.col("text"), F.col("segment_text"))),
-        ).otherwise(F.array().cast("array<struct<obj:string,segment_text:string>>"))
+            F.array(F.struct("text", "segment_text")).cast(obj_t),
+        ).otherwise(F.array().cast(obj_t))
     )
     return triples.select(
         F.coalesce("entity_name", "url").alias("subj"),

@@ -11,8 +11,8 @@ boilerplate_doc_frac, unigram_ce, tfidf_topk).
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
+from pdf_metadata_extraction_spark.operators import text
 from pdf_metadata_extraction_spark.operators.boilerplate import (
     boilerplate_fraction,
     boilerplate_ngrams,
@@ -28,7 +28,6 @@ from pdf_metadata_extraction_spark.operators.decontam import (
     contamination,
     eval_ngram_set,
     scrub_contaminated_spans,
-    word_ngram_col,
 )
 
 
@@ -44,13 +43,8 @@ def test_word_ngrams_order_and_short_doc_guard(spark):
         [(1, "a b c d"), (2, "a b")], "doc_id long, text string"
     )
     out = (
-        df.select(
-            "doc_id",
-            F.expr("filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')").alias(
-                "_w"
-            ),
-        )
-        .select("doc_id", word_ngram_col("_w", 3).alias("g"))
+        df.select("doc_id", text.words().alias("_w"))
+        .select("doc_id", text.word_ngrams("_w", 3).alias("g"))
         .orderBy("doc_id")
         .collect()
     )

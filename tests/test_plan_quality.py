@@ -528,3 +528,99 @@ def test_t_infers_each_table_schema_once(spark, mix_corpus, tmp_path):
     rewritten = E._t(spark, d, "documents")
     assert rewritten.columns == first.columns + ["extra"]
     assert rewritten.where("extra = 1").count() == table.num_rows
+
+
+def _final_plan(df) -> str:
+    """The executed plan of ``df`` after a collect: the final plan when
+    AQE re-planned it."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
+def test_query_mix_plans_hold_no_lambda(spark, mix_corpus):
+    """The benchmark's seven registry queries run their per-element text
+    paths (tokenizer, term counts, shingles, n-grams) as generated code:
+    no executed plan holds a higher-order function's lambda, which runs
+    interpreted once per array element. ``bm25_topk`` tokenizes each
+    document once per branch (the scoring scan and the stats scan): no
+    filter Catalyst inferred from the score's ``_s > 0`` re-tokenizes
+    it in the scan task below the round-robin spread."""
+    import __spark_entry__ as E
+    from perfbench.workloads import MIX
+
+    fns = E.queries()
+    plans = {q: _final_plan(fns[q](spark, mix_corpus)) for q in MIX}
+    assert {q: p.count("lambdafunction") for q, p in plans.items()} == dict.fromkeys(MIX, 0)
+    bm25 = plans["bm25_topk"]
+    assert bm25.count("split(lower(") == bm25.count("FileScan parquet") == 2, bm25
+
+
+def test_triples_to_edges_holds_no_lambda(spark):
+    """The options case zips the values' ids and segment texts instead of
+    a transform lambda; the text case and the empty case are unchanged."""
+    from pdf_metadata_extraction_spark.operators.triples import triples_to_edges
+
+    triples = spark.createDataFrame(
+        [
+            ("u1", None, "n", None, [("o1", "L1", "s1"), ("o2", "L2", None)], "seg"),
+            ("u2", "e2", "n", "txt", [], "seg2"),
+            ("u3", None, "n", "", None, "seg3"),
+        ],
+        "url string, entity_name string, extraction_name string, text string,"
+        " values array<struct<id:string,label:string,segment_text:string>>,"
+        " segment_text string",
+    )
+    edges = triples_to_edges(triples)
+    assert sorted(tuple(r) for r in edges.collect()) == [
+        ("e2", "n", "txt", "u2", "seg2"),
+        ("u1", "n", "o1", "u1", "s1"),
+        ("u1", "n", "o2", "u1", None),
+    ]
+    assert "lambdafunction" not in _plan(edges)
+
+
+def _spread_tables(spark, mix_corpus, root) -> list[str]:
+    """Parquet files to check the spread decision over: the benchmark's
+    mix corpus, files of a few sizes written here, and the tables of the
+    sf directory ``SPARK_GRAFT_SF_DIR`` names, when it names one."""
+    import os
+    from pathlib import Path
+
+    paths = [f"{mix_corpus}/documents.parquet"]
+    for rows in (10, 20_000, 200_000):
+        p = f"{root}/t{rows}.parquet"
+        spark.range(rows).selectExpr("id", "md5(cast(id AS string)) AS h").toPandas().to_parquet(p)
+        paths.append(p)
+    sf = os.environ.get("SPARK_GRAFT_SF_DIR")
+    if sf:
+        paths += sorted(str(p) for p in Path(sf).glob("*.parquet"))
+    return paths
+
+
+@pytest.mark.parametrize("conf", [
+    {},
+    {"spark.sql.files.maxPartitionBytes": "64k"},
+    {"spark.sql.files.openCostInBytes": "8k"},
+    {"spark.sql.files.openCostInBytes": "8k", "spark.sql.files.minPartitionNum": "3"},
+])
+def test_scan_splits_match_the_planned_read(spark, mix_corpus, tmp_path, conf):
+    """``_t``'s spread decision works out a file's scan tasks from its
+    length and the session's file confs; it must equal the partition
+    count of the planned read, which it replaces."""
+    import os
+
+    import __spark_entry__ as E
+
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        for path in _spread_tables(spark, mix_corpus, tmp_path):
+            planned = spark.read.parquet(path).rdd.getNumPartitions()
+            assert E._scan_splits(spark, os.path.getsize(path)) == planned, (path, conf)
+    finally:
+        for k, v in old.items():
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
